@@ -313,15 +313,52 @@ def top_k_sketch(
     return spark.createDataFrame(out_rows, out_schema)
 
 
+def kll_fold(capacity: int):
+    """THE KLL compactor fold, as a closure over ``capacity``.
+
+    ``fold(levels, in_levels, compactions) -> compactions`` concatenates
+    ``in_levels`` level-wise into ``levels`` (mutated in place), then
+    compacts every level over ``capacity``: sort, keep alternate items
+    and promote them one level up (weight doubles). The offset alternates
+    with the running compaction count (a counter, not a coin), so
+    identical input gives identical summaries everywhere; the updated
+    count is returned. Call the factory on the driver and capture the
+    returned closure in mapInPandas bodies: a nested function pickles by
+    value (see ``top_k_sketch``), so workers never import this module."""
+
+    def fold(levels, in_levels, compactions: int) -> int:
+        for i, lvl in enumerate(in_levels):
+            while len(levels) <= i:
+                levels.append([])
+            levels[i].extend(float(x) for x in lvl)
+        i = 0
+        while i < len(levels):
+            if len(levels[i]) > capacity:
+                lvl = sorted(levels[i])
+                off = compactions & 1
+                compactions += 1
+                held = []
+                if len(lvl) & 1:
+                    # hold one item back so EXACTLY half promotes at
+                    # double weight — total weighted count stays exact
+                    # (alternating which end avoids a one-sided bias)
+                    held = [lvl.pop()] if off else [lvl.pop(0)]
+                if len(levels) <= i + 1:
+                    levels.append([])
+                levels[i + 1].extend(lvl[off::2])
+                levels[i] = held
+            i += 1
+        return compactions
+
+    return fold
+
+
 class KLLSummary:
     """Mergeable bounded quantile summary (MRL/KLL compactor family).
 
-    ``levels[i]`` holds values each representing 2^i originals. A level
-    over ``capacity`` sorts and keeps alternate items, promoting them one
-    level up (weight doubles). Deterministic: the compaction offset
-    alternates per compaction (a counter, not a coin), so identical input
-    produces identical summaries everywhere — the property the engine's
-    hash-checked determinism audit relies on.
+    ``levels[i]`` holds values each representing 2^i originals; every
+    ingest path runs the one ``kll_fold`` compactor, so the driver-side
+    summary and the fleet's per-partition summaries compact identically.
 
     Contracts (mirroring the reference's QuantileSketch):
     * bounded state: <= capacity * ceil(log2(n/capacity) + 1) floats;
@@ -339,48 +376,26 @@ class KLLSummary:
         self.levels: list[list[float]] = [[]]
         self._compactions = 0
 
+    def _ingest(self, levels) -> None:
+        fold = kll_fold(self.capacity)
+        self._compactions = fold(self.levels, levels, self._compactions)
+
     # -- ingestion ----------------------------------------------------------
 
     def update(self, value: float) -> None:
-        self.levels[0].append(float(value))
-        self._compress()
+        self._ingest([[value]])
 
     def extend(self, values) -> None:
-        self.levels[0].extend(float(v) for v in values)
-        self._compress()
+        self._ingest([values])
 
     def merge(self, other: "KLLSummary") -> None:
-        for i, lvl in enumerate(other.levels):
-            while len(self.levels) <= i:
-                self.levels.append([])
-            self.levels[i].extend(lvl)
-        self._compress()
+        self._ingest(other.levels)
 
     @classmethod
     def from_levels(cls, levels, capacity: int = 8192) -> "KLLSummary":
         s = cls(capacity)
-        s.levels = [list(map(float, lvl)) for lvl in levels] or [[]]
-        s._compress()
+        s._ingest(levels)
         return s
-
-    def _compress(self) -> None:
-        i = 0
-        while i < len(self.levels):
-            if len(self.levels[i]) > self.capacity:
-                lvl = sorted(self.levels[i])
-                off = self._compactions & 1
-                self._compactions += 1
-                held = []
-                if len(lvl) & 1:
-                    # hold one item back so EXACTLY half promotes at
-                    # double weight — total weighted count stays exact
-                    # (alternating which end avoids a one-sided bias)
-                    held = [lvl.pop()] if off else [lvl.pop(0)]
-                if len(self.levels) <= i + 1:
-                    self.levels.append([])
-                self.levels[i + 1].extend(lvl[off::2])
-                self.levels[i] = held
-            i += 1
 
     # -- queries ------------------------------------------------------------
 

@@ -5,9 +5,10 @@ Dataflow per batch (reference parity, FilterBolt.java:148-175 +
 JoinBolt.java:130-259):
 
   1. drain the control channel (QuerySpout): submissions + signals
-  2. for each active query: filter -> project the batch (raw-name filter
-     semantics), compute the bounded partial aggregate IN SPARK, merge into
-     the query's driver-side state
+  2. every active query is a member of one fleet: the shared scan
+     (streaming/multiquery.py) computes each member's filtered, projected,
+     bounded partial aggregate IN SPARK, and the driver merges it into the
+     query's state
   3. lifecycle tick: RAW-full -> done; duration expired -> done; rate limit
      exceeded -> FAIL with partial result; window closed -> emit + reset
   4. emit Clips (records + metadata: query id, receive/finish time, window
@@ -20,16 +21,15 @@ Windows (SURVEY.md §2.5):
     the reference's 100 ms tick clock)
   * SlidingRecordWindow(n)  -> emit + reset every n records consumed
 
-The batch work stays fully distributed (Catalyst plans each query's
-filter+partial-agg over the batch); only bounded partial tables reach the
-driver — the same wire discipline as FilterBolt->JoinBolt sketch bytes.
-Scale note: with N concurrent queries the shared-scan multiplexer
-(streaming/multiquery.py) folds every aggregation family into one job per
-distinct key-set, RAW fleets into one mapInPandas pass per 64 members,
-and QUANTILE fleets into one KLL-partial pass per 16; the query-predicate
-partitioner (streaming/partitioner.py) prunes provably-non-matching
-queries before any job runs. Batch caching amortizes whatever remains
-per-query.
+The batch work stays fully distributed; only bounded partial rows reach
+the driver — the same wire discipline as FilterBolt->JoinBolt sketch
+bytes. There is one execution path, whatever the fleet: the shared scan
+folds every aggregation family into one job per distinct key-set, RAW
+fleets into one mapInPandas pass per 64 members and QUANTILE fleets into
+one KLL pass per 16; the optional query-predicate partitioner
+(streaming/partitioner.py) prunes provably-non-matching queries before
+any job runs. A chunk that fails re-runs its members one by one, so a
+broken query FAILs alone.
 """
 
 from __future__ import annotations
@@ -75,7 +75,6 @@ class StreamingEngine:
         cache_batches: bool = True,
         config: "EngineConfig | None" = None,
         enable_query_partitioner: bool = False,
-        enable_shared_scan: bool = True,
     ) -> None:
         from bullet_storm_spark.config import EngineConfig
 
@@ -93,9 +92,8 @@ class StreamingEngine:
         )
         self.cache_batches = cache_batches
         self.enable_query_partitioner = enable_query_partitioner
-        self.enable_shared_scan = enable_shared_scan
         self.queries_pruned = 0  # partitioner effectiveness counter
-        self.shared_scan_queries = 0  # queries served by shared-scan jobs
+        self.shared_scan_queries = 0  # query-batches served by the fleet
         self.batches_processed = 0
         self.results: list[tuple[str, Clip]] = []  # in-memory ResultBolt
         self.result_handlers: list[ResultHandler] = []
@@ -104,8 +102,8 @@ class StreamingEngine:
 
         self.metrics = EngineMetrics()
         self._listener = None  # Spark listener bridge once attached
-        # concurrent job-submission width: each per-query/chunk partial is
-        # a tiny job (AQE coalesces its shuffle), so the binding cost is
+        # concurrent job-submission width: each chunk's partial is a tiny
+        # job (AQE coalesces its shuffle), so the binding cost is
         # submission round-trips, not cores — measured on local[32]:
         # 100-query batch 4.9s at width 8, 3.0s at width 24
         try:
@@ -113,25 +111,9 @@ class StreamingEngine:
         except Exception:  # pragma: no cover - no context yet
             cores = 8
         self.job_pool_width = max(8, cores - 8)
-        # shared-scan plan cache: ChunkPlans are batch-independent Column
-        # trees, and rebuilding them per micro-batch cost ~1.5 s/batch at
-        # 100 queries (more than the jobs themselves). Keyed on the exact
-        # member objects in order; any fleet change rebuilds. RAW members
-        # cache SEPARATELY: RAW queries fill and COMPLETE by design
-        # (often one per batch), and keying one cache on the whole fleet
-        # made every RAW completion re-plan the (stable) aggregation
-        # fleet too — measured 2.3 s/batch on the 100-query bench mix vs
-        # 0.5 s once split (r10).
-        self._chunk_cache_key: tuple | None = None
-        self._chunk_cache = None
-        self._raw_chunk_cache_key: tuple | None = None
-        self._raw_chunk_cache = None
-        # bound-DataFrame cache (multiquery.shared_partials): chunk plans
-        # attached to a concrete batch frame. Hits when a stable fleet
-        # replays one frame (bench/tests/replay); a fresh foreachBatch
-        # frame misses by key and rebinds. Invalidated with the plan
-        # caches above.
-        self._bound_cache: dict = {}
+        from bullet_storm_spark.streaming.multiquery import FleetPlan
+
+        self.fleet = FleetPlan()
 
     def add_metrics_consumer(self, consumer) -> None:
         """Register a pluggable metrics consumer (BulletMetrics analogue,
@@ -278,21 +260,6 @@ class StreamingEngine:
                         rq.state.reset()
                     rq.window_record_marker += win.emit_every
 
-    def _compute_partial(self, rq, cached: DataFrame):
-        """Filter -> project -> bounded partial aggregate for one query over
-        the batch. Pure Spark job; safe to run concurrently across queries
-        (the Spark scheduler interleaves jobs; FAIR mode recommended for
-        many live queries)."""
-        q = rq.query
-        df = cached
-        if q.filter is not None:
-            df = df.where(q.filter.to_column())
-        if q.projection.fields is not None:
-            df = df.select(
-                *[f.expression.to_column().alias(f.name) for f in q.projection.fields]
-            )
-        return [r.asDict() for r in rq.state.partial(df).collect()]
-
     def process_batch(
         self, batch_df: DataFrame, batch_id: int = 0, source: str | None = None
     ) -> None:
@@ -305,11 +272,11 @@ class StreamingEngine:
         lifecycle still advances. ``source=None`` (the reference's
         single-stream model) feeds every live query.
 
-        With multiple live queries the per-query partial jobs are submitted
-        from a thread pool so Spark schedules them concurrently over the
-        (cached) batch — the multi-query multiplexing the reference got from
-        independent bolts (SURVEY.md §7.3 known-hard #1); state merge and
-        lifecycle stay single-threaded in stable submission order."""
+        Every scanned query is a fleet member (multiquery.FleetPlan): its
+        chunk jobs run concurrently over the batch — the multi-query
+        multiplexing the reference got from independent bolts (SURVEY.md
+        §7.3 known-hard #1); state merge and lifecycle stay
+        single-threaded in stable submission order."""
         self._drain_control()
         self.batches_processed += 1
         from bullet_storm_spark.streaming import metrics as M
@@ -317,19 +284,8 @@ class StreamingEngine:
         self.metrics.increment(M.BATCHES_PROCESSED)
         active = self.registry.active()
         now_ms = int(self.clock() * 1000)
-        if len(active) < 2 and (
-            self._chunk_cache is not None or self._raw_chunk_cache is not None
-        ):
-            # fleet shrank below any possible shareable threshold: drop
-            # the cached ChunkPlans so retired queries' state can be
-            # collected (the later shared-scan check also clears this,
-            # but never runs when the batch short-circuits here)
-            self._chunk_cache_key = None
-            self._chunk_cache = None
-            self._raw_chunk_cache_key = None
-            self._raw_chunk_cache = None
-            self._bound_cache.clear()
         if not active:
+            self.fleet.clear()  # release retired queries' plans
             return
         if source is not None:
             lifecycle_only = [rq for rq in active if rq.query.source != source]
@@ -353,200 +309,63 @@ class StreamingEngine:
                 values = part.batch_values(batch_df)
                 scan = [rq for rq in active if part.should_scan(rq.id, values)]
                 self.queries_pruned += len(active) - len(scan)
-        # shared scan (multiquery.py): collapse shareable aggregation queries
-        # into ONE grouping-sets job; the rest run per-query
-        shared: list = []
-        if self.enable_shared_scan and len(scan) > 1:
-            from bullet_storm_spark.streaming.multiquery import is_shareable
+        partials, failed = self.fleet.shared_partials(
+            batch_df, scan, pool_width=self.job_pool_width, persist=self.cache_batches
+        )
+        self.shared_scan_queries += len(scan)
+        for rq in list(active):
+            if rq.id in failed:
+                self.registry.remove(rq.id, QueryStatus.FAILED)
+                self._emit(rq.id, Clip.error(rq.id, [failed[rq.id]]))
+                active = [a for a in active if a.id != rq.id]
+        for rq in active:
+            if rq.id in partials:
+                partial_rows = partials[rq.id]
+                # record-consumption accounting rides the partial job
+                # itself (state.consumed reads count columns the
+                # partial already computed — never an extra job)
+                rq.state.merge(partial_rows)
+                consumed = rq.state.consumed(partial_rows)
+                rq.records_consumed += consumed
+                if consumed:
+                    self.metrics.increment(M.RECORDS_CONSUMED, consumed)
 
-            shared = [
-                rq
-                for rq in scan
-                if is_shareable(rq, rate_limited=self.rate_limit is not None)
-            ]
-            if len(shared) < 2:
-                shared = []
-            else:
-                scan = [rq for rq in scan if rq not in shared]
-        # shared queries plan into one job per distinct key-set (usually >1)
-        n_jobs = len(scan) + (2 if shared else 0)
-        # persist the batch only if the caller hasn't already: a pre-
-        # normalized, pre-persisted batch (bench.py, replayed batches)
-        # passes straight through, while a fresh foreachBatch frame is
-        # persisted for the multi-job fan-out and ALWAYS unpersisted after
-        # — cache() returns self in PySpark, so the old `cached is not
-        # batch_df` guard never fired and every micro-batch's cache entry
-        # leaked for the life of the stream
-        we_persisted = False
-        if self.cache_batches and n_jobs > 1 and not getattr(batch_df, "is_cached", False):
-            batch_df.persist()
-            we_persisted = True
-        cached = batch_df
-        try:
-            failed: dict[str, str] = {}
-
-            def safe_partial(rq):
-                # per-query fault isolation: a broken plan FAILs that query
-                # only (JoinBolt error path, JoinBolt.java:261-268) — the
-                # rest of the batch proceeds
-                try:
-                    return self._compute_partial(rq, cached)
-                except Exception as e:  # noqa: BLE001
-                    failed[rq.id] = str(e)[:500]
-                    return None
-
-            if len(scan) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(len(scan), self.job_pool_width)
-                ) as pool:
-                    partials = dict(
-                        zip([rq.id for rq in scan], pool.map(safe_partial, scan))
+            # rate limiting (JoinBolt.java:159-160,194-208): FAIL with
+            # partial results + a structured RateLimitError object in
+            # the Clip meta (FilterBolt.java:111,191-193 error stream)
+            if self.rate_limit is not None:
+                elapsed_s = max((now_ms - rq.receive_time_ms) / 1000.0, 0.001)
+                rate = rq.records_consumed / elapsed_s
+                if rate > self.rate_limit:
+                    self.metrics.increment(M.QUERIES_RATE_EXCEEDED)
+                    self._finish(
+                        rq,
+                        Signal.FAIL,
+                        errors=[
+                            {
+                                "error": (
+                                    "Query exceeded the maximum record "
+                                    f"rate: {rate:.1f} records/s > "
+                                    f"{self.rate_limit} records/s limit"
+                                ),
+                                "resolutions": [
+                                    "Make the query filter more selective",
+                                    "Raise rate_limit_records_per_s",
+                                ],
+                            }
+                        ],
                     )
-            elif scan:
-                partials = {scan[0].id: safe_partial(scan[0])}
-            else:
-                partials = {}
-            partials = {k: v for k, v in partials.items() if v is not None}
-            if not shared and (
-                self._chunk_cache is not None
-                or self._raw_chunk_cache is not None
-            ):
-                # fleet shrank below the shareable threshold: drop the
-                # cached plans so the retired queries' RunningQuery
-                # objects (and their accumulated state) can be collected
-                self._chunk_cache_key = None
-                self._chunk_cache = None
-                self._raw_chunk_cache_key = None
-                self._raw_chunk_cache = None
-                self._bound_cache.clear()
-            if shared:
-                from bullet_storm_spark.streaming.multiquery import (
-                    plan_chunks,
-                    plan_raw_chunks,
-                    shared_partials,
-                    split_fleet,
-                )
-
-                try:
-                    # the one split definition (multiquery.split_fleet)
-                    # keys BOTH caches, so the cache layout can't drift
-                    # from the planner's own split
-                    raw_fleet, agg_fleet = split_fleet(shared)
-                    key = tuple((rq.id, id(rq)) for rq in agg_fleet)
-                    if key != self._chunk_cache_key:
-                        self._chunk_cache = plan_chunks(agg_fleet)
-                        self._chunk_cache_key = key
-                    raw_key = tuple((rq.id, id(rq)) for rq in raw_fleet)
-                    if raw_key != self._raw_chunk_cache_key:
-                        # RAW members fill and COMPLETE by design, often a
-                        # few per batch — rebuilding the plan (and its
-                        # bound frame) on every completion kept the bench
-                        # fleet in permanent plan churn (~0.8 s/batch,
-                        # r12). A fleet that only SHRANK keeps the cached
-                        # plan: completed members' rows are skipped at
-                        # collect time (room = 0) and ignored by the
-                        # active-query merge, so results are identical.
-                        # Rebuild on NEW members, or once live members
-                        # drop below half the plan (dead flag columns
-                        # still evaluate JVM-side — bounded waste).
-                        cached_ids = {
-                            (rq.id, id(rq))
-                            for cp in (self._raw_chunk_cache or [])
-                            for rq in cp.rqs
-                        }
-                        live = set(raw_key)
-                        if (
-                            self._raw_chunk_cache is None
-                            or not live <= cached_ids
-                            or len(live) * 2 < len(cached_ids)
-                        ):
-                            self._raw_chunk_cache = plan_raw_chunks(raw_fleet)
-                        self._raw_chunk_cache_key = raw_key
-                    for qid, rows in shared_partials(
-                        cached,
-                        shared,
-                        pool_width=self.job_pool_width,
-                        chunks=self._raw_chunk_cache + self._chunk_cache,
-                        bound_cache=self._bound_cache,
-                    ).items():
-                        partials[qid] = rows
-                    self.shared_scan_queries += len(shared)
-                except Exception:
-                    # planning/execution failure (e.g. one member's plan is
-                    # broken): fall back to the fault-isolated per-query
-                    # path so only the offender FAILs; drop the cached
-                    # plans so the next batch re-plans from scratch
-                    self._chunk_cache_key = None
-                    self._chunk_cache = None
-                    self._raw_chunk_cache_key = None
-                    self._raw_chunk_cache = None
-                    self._bound_cache.clear()
-                    for rq in shared:
-                        out = safe_partial(rq)
-                        if out is not None:
-                            partials[rq.id] = out
-            for rq in list(active):
-                if rq.id in failed:
-                    self.registry.remove(rq.id, QueryStatus.FAILED)
-                    self._emit(rq.id, Clip.error(rq.id, [failed[rq.id]]))
-                    active = [a for a in active if a.id != rq.id]
-            for rq in active:
-                if rq.id in partials:
-                    partial_rows = partials[rq.id]
-                    # record-consumption accounting rides the partial job
-                    # itself (state.consumed reads count columns the
-                    # partial already computed — never an extra job)
-                    rq.state.merge(partial_rows)
-                    consumed = rq.state.consumed(partial_rows)
-                    rq.records_consumed += consumed
-                    if consumed:
-                        from bullet_storm_spark.streaming import metrics as M
-
-                        self.metrics.increment(M.RECORDS_CONSUMED, consumed)
-
-                # rate limiting (JoinBolt.java:159-160,194-208): FAIL with
-                # partial results + a structured RateLimitError object in
-                # the Clip meta (FilterBolt.java:111,191-193 error stream)
-                if self.rate_limit is not None:
-                    elapsed_s = max((now_ms - rq.receive_time_ms) / 1000.0, 0.001)
-                    rate = rq.records_consumed / elapsed_s
-                    if rate > self.rate_limit:
-                        from bullet_storm_spark.streaming import metrics as M
-
-                        self.metrics.increment(M.QUERIES_RATE_EXCEEDED)
-                        self._finish(
-                            rq,
-                            Signal.FAIL,
-                            errors=[
-                                {
-                                    "error": (
-                                        "Query exceeded the maximum record "
-                                        f"rate: {rate:.1f} records/s > "
-                                        f"{self.rate_limit} records/s limit"
-                                    ),
-                                    "resolutions": [
-                                        "Make the query filter more selective",
-                                        "Raise rate_limit_records_per_s",
-                                    ],
-                                }
-                            ],
-                        )
-                        continue
-
-                # early termination: RAW full (FilterBoltTest.java:712-738)
-                if rq.state.is_full() and rq.query.window is None:
-                    self._finish(rq, Signal.COMPLETE)
                     continue
 
-                self._window_tick(rq, now_ms)
+            # early termination: RAW full (FilterBoltTest.java:712-738)
+            if rq.state.is_full() and rq.query.window is None:
+                self._finish(rq, Signal.COMPLETE)
+                continue
 
-                if rq.is_expired(now_ms):
-                    self._finish(rq, Signal.COMPLETE)
-        finally:
-            if we_persisted:
-                batch_df.unpersist()
+            self._window_tick(rq, now_ms)
+
+            if rq.is_expired(now_ms):
+                self._finish(rq, Signal.COMPLETE)
 
     def stats(self) -> dict[str, Any]:
         """Engine statistics — the FilterBolt periodic stats report

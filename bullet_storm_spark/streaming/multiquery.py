@@ -1,8 +1,8 @@
-"""Shared-scan multi-query evaluation — N live queries, few Spark jobs.
+"""Shared-scan fleet evaluation — every live query, few Spark jobs.
 
-The engine's baseline multiplexing runs one job per live query per batch.
-This planner batches every *shareable* query into one aggregation job per
-DISTINCT KEY-SET:
+Every live query is a fleet member, a fleet of one included: this module
+is the engine's only streaming execution path. Aggregation members batch
+into one job per DISTINCT KEY-SET:
 
   pre-select: per job -> each member query's boolean filter column f_i and
               the job's canonical key columns (queries grouping on the same
@@ -20,11 +20,11 @@ a fleet of GROUP ALL health queries is ONE keyless aggregate regardless of
 fleet size. This is the reference's QueryManager one-record-many-queries
 fan-out (SURVEY.md §4 row 1 / §7.3 known-hard #1) as Catalyst plans.
 
-Shareable: GROUP ALL / GROUP BY, TOP K, DISTRIBUTION PMF/CDF — anything
-whose partial is a (possibly keyless) hash aggregation; their per-member
-match count doubles as the record-consumption metric, so they stay
-shareable under rate limits. RAW fleets (the reference's most common
-query shape, ``T/JoinBoltTest.java:340-351`` makeRawQuery) share ONE
+GROUP ALL / GROUP BY, TOP K, COUNT DISTINCT and DISTRIBUTION PMF/CDF fold
+into the key-set jobs; each member's match count doubles as its
+record-consumption metric (rate limits, record windows). RAW fleets (the
+reference's most common query shape, ``T/JoinBoltTest.java:340-351``
+makeRawQuery) share ONE
 mapInPandas pass per <=MAX_RAW_MEMBERS_PER_JOB members: every member's
 filter and projection evaluate JVM-side into a nullable struct column,
 rows matching no member are dropped JVM-side, and the Python stage only
@@ -37,12 +37,13 @@ member's CURRENT remaining capacity is applied driver-side at split
 time so the cached batch-independent plan survives capacity decay.
 QUANTILE fleets likewise share one mapInPandas pass per
 <=MAX_QUANTILE_MEMBERS_PER_JOB members, each member folding its
-filtered values into its own mergeable KLL summary (identical
-compression to the per-query partial, so the paths produce the same
-summaries for the same partitioning).
-Not shareable: record-window queries (emission timing is per-query)
-and COUNT DISTINCT under a rate limit (its sketch partial carries no
-per-member count) — those run on the per-query path.
+filtered values into its own mergeable KLL summary with the one
+``sketches.kll_fold`` compactor. Record windows need nothing special:
+their partial is the same and emission happens driver-side.
+
+``FleetPlan`` is the engine's one plan cache, and it isolates faults per
+chunk: a chunk that fails to plan, bind or collect re-runs each member as
+a fleet of one, and only members whose solo run fails are reported.
 """
 
 from __future__ import annotations
@@ -52,12 +53,12 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from bullet_storm_spark.operators.sketches import kll_fold
 from bullet_storm_spark.operators.top_k import NULL_RENDERING
 from bullet_storm_spark.plans.query import (
     DistributionType,
     GroupBy,
     GroupOpType,
-    SlidingRecordWindow,
     TopK,
 )
 from bullet_storm_spark.streaming.state import (
@@ -67,34 +68,6 @@ from bullet_storm_spark.streaming.state import (
     RawState,
     TopKState,
 )
-
-
-def is_shareable(rq, rate_limited: bool) -> bool:
-    if isinstance(rq.query.window, SlidingRecordWindow):
-        return False
-    state = rq.state
-    if isinstance(state, (GroupState, TopKState)):
-        return True
-    if isinstance(state, RawState):
-        # shipped rows ARE the consumed records for RAW, and the shared
-        # pass ships exactly the per-query path's rows (capped at the
-        # remaining capacity at split time) — accounting is identical
-        # under a rate limit too
-        return True
-    if isinstance(state, DistributionState):
-        # PMF/CDF fold into the binning agg jobs; QUANTILE members share
-        # one mapInPandas pass building each member's mergeable KLL
-        # summary (r10 — the value-sample partial stopped being a blocker
-        # once the partial became the associative KLLSummary)
-        return True
-    if isinstance(state, CountDistinctState):
-        # approx folds an HLL sketch column into the keyless job; exact
-        # folds a collect_set column (raw key values — identical contents
-        # to the per-query distinct partial, nulls excluded both ways).
-        # Rate-limited CD stays per-query: neither column carries the
-        # per-batch record count.
-        return not rate_limited
-    return False
 
 
 @dataclass
@@ -199,9 +172,8 @@ def _add_agg_cols(member: _Member, state, rq, resolve, job: _Job) -> None:
         vname = f"{p}cdk"
         job.value_cols[vname] = F.when(f_ref, key)
         if state.agg.exact:
-            # raw key values, nulls excluded — exactly the per-query
-            # distinct partial's contents, so the driver-side set union
-            # is path-independent
+            # raw key values, nulls excluded (COUNT DISTINCT never
+            # counts a NULL key)
             member.agg_cols.append(
                 F.collect_set(F.col(vname)).alias(f"{p}ks")
             )
@@ -211,6 +183,10 @@ def _add_agg_cols(member: _Member, state, rq, resolve, job: _Job) -> None:
                 F.hll_sketch_agg(F.col(vname)).alias(f"{p}sk")
             )
             member.rename[f"{p}sk"] = "__sketch"
+        member.agg_cols.append(
+            F.sum(F.when(f_ref, 1).otherwise(0)).cast("bigint").alias(f"{p}match")
+        )
+        member.rename[f"{p}match"] = "__nrec"
         return
 
     if isinstance(state, GroupState):
@@ -289,7 +265,7 @@ MAX_MEMBERS_PER_JOB = 16
 MAX_RAW_MEMBERS_PER_JOB = 64
 
 
-@dataclass
+@dataclass(eq=False)
 class RawChunkPlan:
     """One shared RAW pass's batch-independent pieces: per member i a
     filter flag ``__f{i}`` and a nullable struct column ``m{i}`` (the
@@ -323,7 +299,9 @@ class RawChunkPlan:
     _alive_filter: Any = None
 
 
-def _plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
+def plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
+    """The RAW fleet planner (FleetPlan's split RAW plan cache calls it
+    directly on ``split_fleet``'s first half)."""
     chunks: list[RawChunkPlan] = []
     for start in range(0, len(raw_queries), MAX_RAW_MEMBERS_PER_JOB):
         members = raw_queries[start : start + MAX_RAW_MEMBERS_PER_JOB]
@@ -359,13 +337,13 @@ def _plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
 MAX_QUANTILE_MEMBERS_PER_JOB = 16
 
 
-@dataclass
+@dataclass(eq=False)
 class QuantileChunkPlan:
     """One shared QUANTILE pass: per member i a filter flag ``f{i}`` and
     a filtered double value column ``q{i}``; the Python stage folds each
-    member's values into its own KLL accumulator (the same deterministic
-    compression as DistributionState.partial), one row per (partition,
-    member) out, tree-merged executor-side past TREE_FANIN partitions."""
+    member's values into its own KLL summary (``sketches.kll_fold``), one
+    row per (partition, member) out, tree-merged executor-side past
+    TREE_FANIN partitions."""
 
     pre_cols: list
     rqs: list[Any]
@@ -394,48 +372,20 @@ def _quantile_chunk_df(
     batch_df: DataFrame, cp: QuantileChunkPlan
 ) -> DataFrame:
     """One job for every QUANTILE member: per-partition per-member KLL
-    summaries (self-contained closures — the same deterministic
-    alternate-keep compression as DistributionState.partial, so shared
-    and per-query paths produce IDENTICAL summaries for the same
-    partitioning), tree-merged executor-side, rows shaped exactly like
-    the per-query partial (__levels/__n/__nrec) for state.merge.
-    Returns the BOUND DataFrame (batch-independent closures), so the
-    engine's bound cache can reuse it across replays of one frame."""
+    summaries, tree-merged executor-side, rows shaped
+    ``member/__levels/__n/__nrec`` for state.merge. Returns the BOUND
+    DataFrame (batch-independent closures), so FleetPlan's bound cache
+    can reuse it across replays of one frame."""
     n = len(cp.rqs)
-    cap = cp.rqs[0].state.SAMPLE_CAP
+    fold = kll_fold(cp.rqs[0].state.SAMPLE_CAP)
     fanin = cp.rqs[0].state.TREE_FANIN
     schema = "member int, __levels array<array<double>>, __n long, __nrec long"
-
-    def make_acc():
-        levels: list[list[float]] = [[]]
-        counter = [0]
-
-        def fold(in_levels):
-            for i, lvl in enumerate(in_levels):
-                while len(levels) <= i:
-                    levels.append([])
-                levels[i].extend(float(x) for x in lvl)
-            i = 0
-            while i < len(levels):
-                if len(levels[i]) > cap:
-                    lvl = sorted(levels[i])
-                    off = counter[0] & 1
-                    counter[0] += 1
-                    held = []
-                    if len(lvl) & 1:
-                        held = [lvl.pop()] if off else [lvl.pop(0)]
-                    if len(levels) <= i + 1:
-                        levels.append([])
-                    levels[i + 1].extend(lvl[off::2])
-                    levels[i] = held
-                i += 1
-
-        return levels, fold
 
     def build(batches):
         import pandas as pd
 
-        accs = [make_acc() for _ in range(n)]
+        levels: list = [[[]] for _ in range(n)]
+        compactions = [0] * n
         nv = [0] * n
         nr = [0] * n
         for pdf in batches:
@@ -443,41 +393,30 @@ def _quantile_chunk_df(
                 nr[i] += int(pdf[f"f{i}"].sum())
                 vals = pdf[f"q{i}"].dropna()
                 nv[i] += len(vals)
-                accs[i][1]([list(vals)])
+                compactions[i] = fold(levels[i], [list(vals)], compactions[i])
         yield pd.DataFrame(
-            {
-                "member": list(range(n)),
-                "__levels": [accs[i][0] for i in range(n)],
-                "__n": nv,
-                "__nrec": nr,
-            }
+            {"member": list(range(n)), "__levels": levels, "__n": nv, "__nrec": nr}
         )
 
     def tree_merge(batches):
         import pandas as pd
 
-        accs = {}
-        nv: dict = {}
-        nr: dict = {}
+        acc: dict = {}  # member -> [levels, compactions, n, nrec]
         for pdf in batches:
             for m, lv, nn, nrec in zip(
                 pdf["member"], pdf["__levels"], pdf["__n"], pdf["__nrec"]
             ):
-                m = int(m)
-                if m not in accs:
-                    accs[m] = make_acc()
-                    nv[m] = 0
-                    nr[m] = 0
-                accs[m][1](lv)
-                nv[m] += int(nn)
-                nr[m] += int(nrec)
-        members = sorted(accs)
+                a = acc.setdefault(int(m), [[[]], 0, 0, 0])
+                a[1] = fold(a[0], lv, a[1])
+                a[2] += int(nn)
+                a[3] += int(nrec)
+        members = sorted(acc)
         yield pd.DataFrame(
             {
                 "member": members,
-                "__levels": [accs[m][0] for m in members],
-                "__n": [nv[m] for m in members],
-                "__nrec": [nr[m] for m in members],
+                "__levels": [acc[m][0] for m in members],
+                "__n": [acc[m][2] for m in members],
+                "__nrec": [acc[m][3] for m in members],
             }
         )
 
@@ -502,13 +441,6 @@ def _collect_quantile_chunk(
             }
         )
     return result
-
-
-def _run_quantile_chunk(
-    batch_df: DataFrame, cp: QuantileChunkPlan
-) -> list[list[dict]]:
-    """Bind + collect in one call (the uncached path)."""
-    return _collect_quantile_chunk(_quantile_chunk_df(batch_df, cp), cp)
 
 
 # first-fold fan-in of the shared RAW pass: past this many scan
@@ -627,7 +559,7 @@ def _raw_chunk_folded_df(batch_df: DataFrame, cp: RawChunkPlan) -> DataFrame:
 def _collect_raw_chunk(folded: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
     """Collect a (possibly cached) bound RAW pass; per-member rows capped
     at each member's CURRENT remaining capacity (read at call time, like
-    RawState.partial's per-batch limit — the capacity is driver-side, so
+    RawState.merge's room — the capacity is driver-side, so
     the bound frame stays batch/state-independent)."""
     n = len(cp.rqs)
     rows = folded.collect()
@@ -649,7 +581,7 @@ def _run_raw_chunk(batch_df: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
     return _collect_raw_chunk(_raw_chunk_folded_df(batch_df, cp), cp)
 
 
-@dataclass
+@dataclass(eq=False)
 class ChunkPlan:
     """One aggregation job's batch-INDEPENDENT plan pieces: aliased
     pre-select columns, grouping key names, agg expressions, members.
@@ -664,31 +596,25 @@ class ChunkPlan:
     aggs: list
     members: list[_Member]
 
+    @property
+    def rqs(self) -> list[Any]:
+        return [m.rq for m in self.members]
+
 
 def split_fleet(queries) -> tuple[list, list]:
-    """THE RAW-vs-rest fleet split — the one definition both the
-    engine's split plan caches and ``plan_chunks`` key off (RAW members
-    cache separately because they fill and COMPLETE per batch; one
-    whole-fleet cache key made every RAW completion re-plan the stable
-    aggregation fleet — measured 2.3 s/batch vs 0.5 s split, r10).
-    Returns ``(raw_queries, other_queries)`` preserving order."""
+    """THE RAW-vs-rest fleet split — the one definition both FleetPlan's
+    split plan caches and ``plan_chunks`` key off. Returns
+    ``(raw_queries, other_queries)`` preserving order."""
     raw = [rq for rq in queries if isinstance(rq.state, RawState)]
     rest = [rq for rq in queries if not isinstance(rq.state, RawState)]
     return raw, rest
 
 
-def plan_raw_chunks(raw_queries) -> list[RawChunkPlan]:
-    """Public name for the RAW fleet planner (the engine's split RAW
-    plan cache calls this directly on ``split_fleet``'s first half)."""
-    return _plan_raw_chunks(raw_queries)
-
-
 def plan_chunks(queries) -> list:
     """plan_jobs + MAX_MEMBERS_PER_JOB chunking + per-chunk column
     pruning, as cacheable batch-independent plans (ChunkPlan for the
-    aggregation families, RawChunkPlan for RAW fleets). The engine caches
-    the result keyed on the fleet identity and rebuilds only when a query
-    is added or finishes."""
+    key-set jobs, QuantileChunkPlan for QUANTILE fleets, RawChunkPlan for
+    RAW fleets)."""
     def _is_quantile(rq):
         return (
             isinstance(rq.state, DistributionState)
@@ -717,97 +643,155 @@ def plan_chunks(queries) -> list:
     return chunks
 
 
-def shared_partials(
-    batch_df: DataFrame, queries, pool_width: int = 8, chunks=None,
-    bound_cache: dict | None = None,
-) -> dict[str, list[dict[str, Any]]]:
-    """Compute every query's partial rows in one job per distinct key-set
-    (chunked to MAX_MEMBERS_PER_JOB queries per plan). Chunk jobs execute
-    concurrently — on low-partition batches a single job can't use the
-    cluster, so concurrency across jobs supplies the parallelism, exactly
-    like the per-query path. Pass ``chunks`` (from ``plan_chunks``, cached
-    across batches for a stable fleet) to skip plan construction.
+def _bind(batch_df: DataFrame, cp) -> DataFrame:
+    """Attach one chunk plan to a batch frame (Catalyst analysis runs
+    here, so a member referencing a missing column fails here)."""
+    if isinstance(cp, RawChunkPlan):
+        return _raw_chunk_folded_df(batch_df, cp)
+    if isinstance(cp, QuantileChunkPlan):
+        return _quantile_chunk_df(batch_df, cp)
+    pre = batch_df.select(*cp.pre_cols)
+    if cp.key_names:
+        return pre.groupBy(*[F.col(k) for k in cp.key_names]).agg(*cp.aggs)
+    return pre.agg(*cp.aggs)
 
-    ``bound_cache`` (engine-owned dict) additionally caches the BOUND
-    DataFrames — chunk Column trees attached to a concrete batch frame —
-    keyed on (chunks identity, batch frame identity). Re-collecting a
-    previously bound DataFrame skips Catalyst re-planning of an identical
-    plan (measured r12: 0.35 s fresh-bind-and-collect vs 0.10 s re-collect
-    per 16-member chunk — the data is still fully re-scanned and
-    re-aggregated on every call, only the PLAN is reused). A stable fleet
-    replaying a pinned frame (the bench, tests, replay tooling) hits it
-    every batch; a fresh foreachBatch frame changes the key and rebinds,
-    so streaming pays exactly the old cost. The cache holds one batch's
-    bindings (plus a strong ref to the keyed frame so id() stays valid)."""
-    from concurrent.futures import ThreadPoolExecutor
 
-    result: dict[str, list[dict[str, Any]]] = {rq.id: [] for rq in queries}
-    if chunks is None:
-        chunks = plan_chunks(queries)
-    # PER-CHUNK bound entries keyed on the chunk object: RAW members fill
-    # and COMPLETE by design, so the raw plan churns while the agg fleet
-    # is stable — a whole-fleet key would re-bind all ~30 chunks on every
-    # RAW completion (the r10 split-cache lesson, applied to bindings).
-    # One batch frame's bindings are held at a time; a new frame clears
-    # the map (strong refs below keep the id()-keyed objects alive, so a
-    # recycled id can never false-hit).
-    by_chunk = None
-    if bound_cache is not None:
-        if bound_cache.get("batch") != id(batch_df):
-            bound_cache.clear()
-            bound_cache.update(
-                batch=id(batch_df), batch_ref=batch_df, by_chunk={}
-            )
-        by_chunk = bound_cache["by_chunk"]
-    bound = []
-    for cp in chunks:
-        if by_chunk is not None:
-            hit = by_chunk.get(id(cp))
-            if hit is not None and hit[0] is cp:
-                # identity re-check: the stored strong ref rules out a
-                # recycled id from a GC'd plan object
-                bound.append(hit[1])
+def _collect(out: DataFrame, cp) -> dict[str, list[dict[str, Any]]]:
+    """Run one bound chunk: its members' partial rows by query id."""
+    if isinstance(cp, RawChunkPlan):
+        return dict(zip([rq.id for rq in cp.rqs], _collect_raw_chunk(out, cp)))
+    if isinstance(cp, QuantileChunkPlan):
+        return dict(
+            zip([rq.id for rq in cp.rqs], _collect_quantile_chunk(out, cp))
+        )
+    result: dict[str, list[dict[str, Any]]] = {m.rq.id: [] for m in cp.members}
+    for r in out.collect():
+        row = r.asDict()
+        for m in cp.members:
+            if m.keyed and not row.get(f"{m.prefix}match"):
                 continue
-        if isinstance(cp, RawChunkPlan):
-            entry = ("raw", _raw_chunk_folded_df(batch_df, cp), cp)
-        elif isinstance(cp, QuantileChunkPlan):
-            entry = ("quant", _quantile_chunk_df(batch_df, cp), cp)
-        else:
-            pre = batch_df.select(*cp.pre_cols)
-            if cp.key_names:
-                out = pre.groupBy(
-                    *[F.col(k) for k in cp.key_names]
-                ).agg(*cp.aggs)
-            else:
-                out = pre.agg(*cp.aggs)
-            entry = ("agg", out, cp.members)
-        bound.append(entry)
-        if by_chunk is not None:
-            by_chunk[id(cp)] = (cp, entry)
-
-    def run(chunk):
-        tag, out, members = chunk
-        if tag == "raw":
-            return _collect_raw_chunk(out, members), members
-        if tag == "quant":
-            return _collect_quantile_chunk(out, members), members
-        return [r.asDict() for r in out.collect()], members
-
-    if len(bound) > 1:
-        with ThreadPoolExecutor(max_workers=min(len(bound), pool_width)) as pool:
-            computed = list(pool.map(run, bound))
-    else:
-        computed = [run(bound[0])] if bound else []
-    for rows, members in computed:
-        if isinstance(members, (RawChunkPlan, QuantileChunkPlan)):
-            for rq, member_rows in zip(members.rqs, rows):
-                result[rq.id] = member_rows
-            continue
-        for row in rows:
-            for m in members:
-                if m.keyed and not row.get(f"{m.prefix}match"):
-                    continue
-                result[m.rq.id].append(
-                    {out_name: row[in_name] for in_name, out_name in m.rename.items()}
-                )
+            result[m.rq.id].append(
+                {out_name: row[in_name] for in_name, out_name in m.rename.items()}
+            )
     return result
+
+
+class FleetPlan:
+    """The engine's one plan cache: the live fleet's chunk plans plus
+    their bindings to the current batch frame.
+
+    Chunk plans are batch-independent, so they are cached keyed on the
+    exact member objects. RAW members cache SEPARATELY (``split_fleet``):
+    they fill and COMPLETE by design, often a few per batch, and one
+    whole-fleet key made every RAW completion re-plan the stable
+    aggregation fleet (measured 2.3 s/batch vs 0.5 s split, r10). A RAW
+    fleet that only SHRANK keeps its plan — finished members' rows are
+    skipped at collect time (room = 0) and ignored by the engine's merge
+    — and is rebuilt when a new member arrives or live members drop
+    below half the plan (dead flag columns still evaluate JVM-side:
+    bounded waste).
+
+    The bindings (chunk plans attached to one batch frame) let a stable
+    fleet replaying one frame (bench, tests, replay tooling) skip
+    Catalyst re-planning (measured r12: 0.35 s fresh bind-and-collect vs
+    0.10 s re-collect per 16-member chunk; the data is re-scanned either
+    way). A fresh foreachBatch frame rebinds. Only the current plan's
+    chunks stay bound, so bindings never pin retired members."""
+
+    def __init__(self) -> None:
+        self.clear()
+
+    def clear(self) -> None:
+        """Drop every cached plan and binding; the next batch replans."""
+        self._agg_key: tuple | None = None
+        self._agg_chunks: list = []
+        self._raw_chunks: list[RawChunkPlan] = []
+        self._frame: DataFrame | None = None
+        self._bound: dict = {}
+
+    def chunks(self, queries) -> list:
+        """Chunk plans covering ``queries``, reused per the policy above."""
+        raw, rest = split_fleet(queries)
+        key = tuple(map(id, rest))
+        if key != self._agg_key:
+            self._agg_chunks = plan_chunks(rest)
+            self._agg_key = key
+        live = set(map(id, raw))
+        planned = {id(rq) for cp in self._raw_chunks for rq in cp.rqs}
+        if not live <= planned or len(live) * 2 < len(planned):
+            self._raw_chunks = plan_raw_chunks(raw)
+        return self._raw_chunks + self._agg_chunks
+
+    def shared_partials(
+        self, batch_df: DataFrame, queries, pool_width: int = 8, persist: bool = True
+    ) -> tuple[dict[str, list[dict[str, Any]]], dict[str, str]]:
+        """``(partials, failures)`` for ``queries`` over one batch: each
+        query's partial rows, and the error of each query that failed on
+        its own. Chunk jobs run concurrently — on low-partition batches
+        one job can't use the cluster, so concurrency across jobs
+        supplies the parallelism. With ``persist``, a plan of more than
+        one chunk persists the batch (unless the caller already did) and
+        always unpersists it afterwards."""
+        try:
+            chunks = self.chunks(queries)
+            broken: list[list] = []
+        except Exception:  # noqa: BLE001 - some member's plan is broken
+            chunks, broken = [], [list(queries)]
+        persisted = (
+            persist and len(chunks) > 1 and not getattr(batch_df, "is_cached", False)
+        )
+        if persisted:
+            batch_df.persist()
+        try:
+            partials = self._run_chunks(batch_df, chunks, broken, pool_width)
+            failures: dict[str, str] = {}
+            if broken:
+                # re-run each member of a failed chunk as a fleet of one,
+                # so only the members that fail alone are reported; the
+                # next batch replans the live fleet from scratch
+                self.clear()
+                live = set(map(id, queries))
+                for rq in (rq for rqs in broken for rq in rqs if id(rq) in live):
+                    try:
+                        for cp in plan_chunks([rq]):
+                            partials.update(_collect(_bind(batch_df, cp), cp))
+                    except Exception as e:  # noqa: BLE001
+                        failures[rq.id] = str(e)[:500]
+            return partials, failures
+        finally:
+            if persisted:
+                batch_df.unpersist()
+
+    def _run_chunks(self, batch_df, chunks, broken, pool_width) -> dict:
+        """Bind (reusing this frame's bindings) and collect every chunk;
+        a chunk that fails either step appends its members to ``broken``."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        prev = self._bound if self._frame is batch_df else {}
+        bound = {}
+        for cp in chunks:
+            try:
+                bound[cp] = prev[cp] if cp in prev else _bind(batch_df, cp)
+            except Exception:  # noqa: BLE001
+                broken.append(cp.rqs)
+        self._frame, self._bound = batch_df, bound
+
+        def collect(item):
+            cp, out = item
+            try:
+                return cp, _collect(out, cp)
+            except Exception:  # noqa: BLE001
+                return cp, None
+
+        if len(bound) > 1:
+            with ThreadPoolExecutor(max_workers=min(len(bound), pool_width)) as pool:
+                done = list(pool.map(collect, bound.items()))
+        else:
+            done = [collect(item) for item in bound.items()]
+        partials: dict[str, list[dict[str, Any]]] = {}
+        for cp, rows in done:
+            if rows is None:
+                broken.append(cp.rqs)
+            else:
+                partials.update(rows)
+        return partials

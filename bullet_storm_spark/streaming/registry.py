@@ -239,6 +239,24 @@ class QueryRegistry:
     def _persist_remove(self, query_id: str) -> None:
         self._append_event({"remove": query_id})
 
+    def _read_log(self) -> list[dict]:
+        """The event log's events. A crash inside ``_append_event`` can
+        leave a torn last line (no trailing newline): that event was never
+        written, so the line is truncated away. An unparseable line
+        anywhere else is corruption and raises."""
+        with open(self._log_path(), "rb") as f:
+            data = f.read()
+        lines = data.split(b"\n")
+        tail = lines.pop()  # b"" when the log ends with a newline
+        events = [json.loads(line) for line in lines if line.strip()]
+        if tail.strip():
+            try:
+                events.append(json.loads(tail))
+            except json.JSONDecodeError:
+                with open(self._log_path(), "r+b") as f:
+                    f.truncate(len(data) - len(tail))
+        return events
+
     def replay(self) -> int:
         """Reload persisted queries on restart (fresh state — aggregation
         state restarts like the reference's replayed queries, which also
@@ -263,16 +281,11 @@ class QueryRegistry:
             items.extend(payload.get("queries", []))
             removed.update(payload.get("removed", []))
         if os.path.exists(self._log_path()):
-            with open(self._log_path()) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    event = json.loads(line)
-                    if "remove" in event:
-                        removed.add(event["remove"])
-                    else:
-                        items.append(event)
+            for event in self._read_log():
+                if "remove" in event:
+                    removed.add(event["remove"])
+                else:
+                    items.append(event)
         if not items and not removed:
             return 0
         self.removed_ids.update(removed)

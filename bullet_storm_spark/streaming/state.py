@@ -6,29 +6,36 @@ merges partials (/root/reference src/main/java/com/yahoo/bullet/storm/
 FilterBolt.java:187-189, JoinBolt.java:154-155; associativity proven by
 JoinBoltTest.java:696-735).
 
-Spark translation: the *partial* phase is a compiled DataFrame aggregation
-over each micro-batch (Catalyst's own partial+final machinery runs inside
-the batch, fully distributed); what crosses to the driver is one bounded
-partial-result table per query per batch — the same wire contract as the
-reference's sketch bytes. The *merge* phase is the small pure-Python
-fold below, bounded by each aggregation's size cap exactly like Bullet's
-sketches bound their state.
+Spark translation: the *partial* phase is the fleet's shared scan
+(streaming/multiquery.py), which computes every live query's bounded
+partial rows over each micro-batch in Spark; what crosses to the driver
+is one bounded partial-row list per query per batch — the same wire
+contract as the reference's sketch bytes. The *merge* phase is the small
+pure-Python fold below, bounded by each aggregation's size cap exactly
+like Bullet's sketches bound their state.
 
 Each QueryState implements:
-  partial(df)  -> DataFrame   (batch -> bounded partial table, runs in Spark)
-  merge(rows)  -> None        (fold partial rows into state, driver-side)
-  result()     -> list[dict]  (current emission, reference output shape)
-  reset()      -> None        (window close — Querier.reset analogue)
-  is_full()    -> bool        (RAW early-termination contract)
+  merge(rows)    -> None        (fold the fleet's partial rows, driver-side)
+  consumed(rows) -> int         (records matched, read off the same rows)
+  result()       -> list[dict]  (current emission, reference output shape)
+  reset()        -> None        (window close — Querier.reset analogue)
+  is_full()      -> bool        (RAW early-termination contract)
+
+Partial-row shapes (one per state, produced by multiquery):
+  RAW       the projected record dicts
+  GROUP     key aliases + __c{i}/__s{i}/__n{i}/__m{i} + __nrec
+  COUNT DIST __ks (exact key list) or __sketch (HLL bytes) + __nrec
+  TOP K     key aliases + __c
+  PMF/CDF   __bin + __c + __nrec
+  QUANTILE  __levels + __n + __nrec
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from bullet_storm_spark.operators import top_k as top_k_op
 from bullet_storm_spark.operators.distribution import cdf_labels, pmf_labels
 from bullet_storm_spark.plans.query import (
     CountDistinct,
@@ -43,9 +50,6 @@ from bullet_storm_spark.plans.query import (
 
 
 class QueryState:
-    def partial(self, df: DataFrame) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError
-
     def merge(self, rows: list[dict[str, Any]]) -> None:  # pragma: no cover
         raise NotImplementedError
 
@@ -72,10 +76,6 @@ class RawState(QueryState):
     def __init__(self, agg: Raw):
         self.size = agg.size
         self.records: list[dict[str, Any]] = []
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        # per-batch limit: never ship more than the remaining capacity
-        return df.limit(max(self.size - len(self.records), 0))
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         room = self.size - len(self.records)
@@ -120,27 +120,6 @@ class GroupState(QueryState):
         self.agg = agg
         self.key_aliases = [agg.alias_of(f) for f in agg.fields]
         self.groups: dict[tuple, dict[str, Any]] = {}
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        keys = [F.col(f).alias(self.agg.alias_of(f)) for f in self.agg.fields]
-        aggs = []
-        for i, op in enumerate(self.agg.operations):
-            f = F.col(op.field) if op.field else None
-            t = op.op
-            if t == GroupOpType.COUNT:
-                aggs.append(F.count(F.lit(1)).alias(f"__c{i}"))
-            elif t == GroupOpType.COUNT_FIELD:
-                aggs.append(F.count(f).alias(f"__c{i}"))
-            elif t in (GroupOpType.SUM, GroupOpType.AVG):
-                aggs.append(F.sum(f.cast("double")).alias(f"__s{i}"))
-                aggs.append(F.count(f).alias(f"__n{i}"))
-            elif t == GroupOpType.MIN:
-                aggs.append(F.min(f).alias(f"__m{i}"))
-            elif t == GroupOpType.MAX:
-                aggs.append(F.max(f).alias(f"__m{i}"))
-        # input-record count rides the same aggregation (consumed())
-        aggs.append(F.count(F.lit(1)).alias("__nrec"))
-        return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         for row in rows:
@@ -195,14 +174,7 @@ class GroupState(QueryState):
         self.groups = {}
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
-        if rows and "__nrec" in rows[0]:
-            return sum(r["__nrec"] or 0 for r in rows)
-        # shared-scan rows: the per-member match count serves as __nrec;
-        # fall back to a COUNT metric if present
-        for i, op in enumerate(self.agg.operations):
-            if op.op == GroupOpType.COUNT:
-                return sum(r.get(f"__c{i}", 0) or 0 for r in rows)
-        return 0
+        return sum(r["__nrec"] or 0 for r in rows)
 
 
 class CountDistinctState(QueryState):
@@ -215,46 +187,13 @@ class CountDistinctState(QueryState):
         self.agg = agg
         self.keys: set = set()
         self.sketch: bytes | None = None
-        self._spark = None
-
-    def _key_col(self):
-        if len(self.agg.fields) == 1:
-            return F.col(self.agg.fields[0])
-        return F.concat_ws("\x1f", *[F.col(f).cast("string") for f in self.agg.fields])
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        self._spark = df.sparkSession
-        if self.agg.exact:
-            # groupBy instead of distinct: same shuffle shape, and the
-            # per-key counts sum to the batch record count (consumed())
-            return df.groupBy(self._key_col().alias("__k")).agg(
-                F.count(F.lit(1)).alias("__nrec")
-            )
-        return df.agg(
-            F.hll_sketch_agg(self._key_col()).alias("__sketch"),
-            F.count(F.lit(1)).alias("__nrec"),
-        )
-
-    def _session(self):
-        if self._spark is not None:
-            return self._spark
-        # shared-scan path never calls partial(); fall back to the active
-        # session for the tiny sketch-merge jobs
-        from pyspark.sql import SparkSession
-
-        return SparkSession.getActiveSession()
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         if self.agg.exact:
-            if rows and "__ks" in rows[0]:
-                # shared-scan rows: one collect_set list per partial row
-                for r in rows:
-                    self.keys.update(r["__ks"] or [])
-                return
-            # COUNT DISTINCT never counts a NULL key (batch operator and
-            # both SQL dialects agree; multi-field concat keys are never
-            # null, matching too)
-            self.keys.update(r["__k"] for r in rows if r["__k"] is not None)
+            # one collect_set list per partial row (NULL keys never
+            # counted, like the batch operator and both SQL dialects)
+            for r in rows:
+                self.keys.update(r["__ks"] or [])
             return
         for r in rows:
             new = r["__sketch"]
@@ -263,7 +202,7 @@ class CountDistinctState(QueryState):
             if self.sketch is None:
                 self.sketch = bytes(new)
             else:
-                merged = self._session().createDataFrame(
+                merged = SparkSession.active().createDataFrame(
                     [(self.sketch, bytes(new))], "a binary, b binary"
                 ).select(
                     F.hll_union("a", "b").alias("u")
@@ -275,9 +214,9 @@ class CountDistinctState(QueryState):
             return [{self.agg.name: len(self.keys)}]
         if self.sketch is None:
             return [{self.agg.name: 0}]
-        est = self._session().createDataFrame([(self.sketch,)], "s binary").select(
-            F.hll_sketch_estimate("s").alias("e")
-        ).collect()[0]["e"]
+        est = SparkSession.active().createDataFrame(
+            [(self.sketch,)], "s binary"
+        ).select(F.hll_sketch_estimate("s").alias("e")).collect()[0]["e"]
         return [{self.agg.name: int(est)}]
 
     def reset(self) -> None:
@@ -285,7 +224,7 @@ class CountDistinctState(QueryState):
         self.sketch = None
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
-        return sum(r.get("__nrec", 0) or 0 for r in rows)
+        return sum(r["__nrec"] or 0 for r in rows)
 
 
 class TopKState(QueryState):
@@ -305,15 +244,6 @@ class TopKState(QueryState):
             from bullet_storm_spark.operators.sketches import SpaceSavingSketch
 
             self.sketch = SpaceSavingSketch(agg.sketch_capacity)
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        keys = [
-            F.coalesce(F.col(f).cast("string"), F.lit(top_k_op.NULL_RENDERING)).alias(
-                self.agg.alias_of(f)
-            )
-            for f in self.agg.fields
-        ]
-        return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__c"))
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         for row in rows:
@@ -360,8 +290,9 @@ class DistributionState(QueryState):
     stream fits one compactor (<= SAMPLE_CAP values — the reference's own
     small-input exactness posture).
 
-    The partial job builds one summary PER PARTITION in Spark (Arrow
-    batches; self-contained closure) and ships levels — the sketch-bytes
+    The fleet's quantile pass (multiquery) builds one summary PER
+    PARTITION in Spark (Arrow batches; the sketches.kll_fold closure)
+    and ships levels — the sketch-bytes
     wire contract. When the scan has more than TREE_FANIN partitions, a
     coalesce + merge stage unions summaries EXECUTOR-SIDE first, so
     driver traffic is O(TREE_FANIN x capacity) floats no matter how many
@@ -380,88 +311,6 @@ class DistributionState(QueryState):
         self.bin_counts = [0] * (len(self.points) + 1)
         self.total = 0
         self.summary = KLLSummary(self.SAMPLE_CAP)
-
-    def partial(self, df: DataFrame) -> DataFrame:
-        v = F.col(self.agg.field).cast("double")
-        if self.agg.dist_type == DistributionType.QUANTILE:
-            cap = self.SAMPLE_CAP
-            schema = "__levels array<array<double>>, __n long, __nrec long"
-
-            # self-contained closures (cloudpickle ships them by value; no
-            # package import on workers) mirroring KLLSummary._compress
-            # deterministically; the accumulator is shared by the build
-            # and the tree-merge stages
-            def make_acc():
-                levels: list[list[float]] = [[]]
-                counter = [0]
-
-                def fold(in_levels):
-                    for i, lvl in enumerate(in_levels):
-                        while len(levels) <= i:
-                            levels.append([])
-                        levels[i].extend(float(x) for x in lvl)
-                    i = 0
-                    while i < len(levels):
-                        if len(levels[i]) > cap:
-                            lvl = sorted(levels[i])
-                            off = counter[0] & 1
-                            counter[0] += 1
-                            held = []
-                            if len(lvl) & 1:
-                                held = [lvl.pop()] if off else [lvl.pop(0)]
-                            if len(levels) <= i + 1:
-                                levels.append([])
-                            levels[i + 1].extend(lvl[off::2])
-                            levels[i] = held
-                        i += 1
-
-                return levels, fold
-
-            def build(batches):
-                import pandas as pd
-
-                levels, fold = make_acc()
-                nval = 0
-                nrec = 0
-                for pdf in batches:
-                    col = pdf["__v"]
-                    nrec += len(col)
-                    vals = col.dropna()
-                    nval += len(vals)
-                    fold([list(vals)])
-                yield pd.DataFrame(
-                    {"__levels": [levels], "__n": [nval], "__nrec": [nrec]}
-                )
-
-            def tree_merge(batches):
-                import pandas as pd
-
-                levels, fold = make_acc()
-                nval = 0
-                nrec = 0
-                for pdf in batches:
-                    for lv, nn, nr in zip(
-                        pdf["__levels"], pdf["__n"], pdf["__nrec"]
-                    ):
-                        fold(lv)
-                        nval += int(nn)
-                        nrec += int(nr)
-                yield pd.DataFrame(
-                    {"__levels": [levels], "__n": [nval], "__nrec": [nrec]}
-                )
-
-            out = df.select(v.alias("__v")).mapInPandas(build, schema)
-            if df.rdd.getNumPartitions() > self.TREE_FANIN:
-                out = out.coalesce(self.TREE_FANIN).mapInPandas(
-                    tree_merge, schema
-                )
-            return out
-        # null values land in a NULL bin (never binned/totaled, but they
-        # keep the batch record count riding this job for consumed())
-        bin_idx = F.lit(0)
-        for p in self.points:
-            bin_idx = bin_idx + (v >= F.lit(p)).cast("int")
-        return df.groupBy(bin_idx.alias("__bin")).agg(F.count(F.lit(1)).alias("__c"))
 
     def merge(self, rows: list[dict[str, Any]]) -> None:
         if self.agg.dist_type == DistributionType.QUANTILE:
@@ -532,11 +381,7 @@ class DistributionState(QueryState):
         self.summary = KLLSummary(self.SAMPLE_CAP)
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
-        if self.agg.dist_type == DistributionType.QUANTILE:
-            return sum(r.get("__nrec", 0) or 0 for r in rows)
-        if rows and "__nrec" in rows[0]:  # shared-scan rows
-            return sum(r["__nrec"] or 0 for r in rows)
-        return sum(r.get("__c", 0) or 0 for r in rows)  # incl. the NULL bin
+        return sum(r["__nrec"] or 0 for r in rows)
 
 
 def make_state(query: Query) -> QueryState:

@@ -1,10 +1,18 @@
-"""Shared-scan multi-query evaluation: one grouping-sets job must produce
-exactly the same per-query state as the per-query path."""
+"""Shared-scan fleet evaluation: every live query is a fleet member, and
+each member's state must equal an independent DuckDB answer over the
+union of the batches it consumed."""
 
+import dataclasses
+import gc
+import weakref
+from collections import Counter
+
+import duckdb
 import pytest
 
 from bullet_storm_spark import (
     CountDistinct,
+    oracle_sql_for,
     Distribution,
     DistributionType,
     GroupAll,
@@ -17,7 +25,68 @@ from bullet_storm_spark import (
     TopK,
 )
 from bullet_storm_spark.plans.expressions import eq, fld, gt
+from bullet_storm_spark.plans.query import SlidingRecordWindow
 from bullet_storm_spark.streaming import QueryRegistry, StreamingEngine
+import bullet_storm_spark.streaming.multiquery as mq
+
+SCHEMA = "k string, s string, v double, n int"
+
+
+def _duck(*row_sets):
+    """DuckDB ``events`` table holding the union of the given batches."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (k VARCHAR, s VARCHAR, v DOUBLE, n INTEGER)")
+    for rows in row_sets:
+        con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", rows)
+    return con
+
+
+def _records(con, sql):
+    cur = con.execute(sql)
+    cols = [d[0] for d in cur.description]
+    return [dict(zip(cols, row)) for row in cur.fetchall()]
+
+
+def _num(v):
+    """Numbers compare as floats rounded to 9 places: integer sums come
+    back as doubles from the state, and interpolations may round
+    differently in the last bits."""
+    if isinstance(v, (int, float)) and not isinstance(v, bool):
+        return round(float(v), 9)
+    return v
+
+
+def _norm(records):
+    """Order-free view of result rows."""
+    return sorted(
+        (tuple(sorted((k, _num(v)) for k, v in r.items())) for r in records),
+        key=repr,
+    )
+
+
+def _oracle(con, q):
+    """The query's answer over the whole table; approximate COUNT DISTINCT
+    has no SQL twin and is checked against the exact count (the fixtures
+    hold at most five keys, where the HLL estimate is exact)."""
+    agg = q.aggregation
+    if isinstance(agg, CountDistinct) and not agg.exact:
+        q = dataclasses.replace(q, aggregation=dataclasses.replace(agg, exact=True))
+    return _records(con, oracle_sql_for(q))
+
+
+def _matches(con, q):
+    """Every record matching the query's filter, projected — RAW's
+    oracle without the limit."""
+    return _records(con, oracle_sql_for(dataclasses.replace(q, aggregation=Raw(size=10**9))))
+
+
+def _check_raw(con, q, got):
+    """RAW contract: exactly min(limit, matches) rows, each one a
+    distinct record matching the filter (multiset containment)."""
+    pool = Counter(tuple(sorted(r.items())) for r in _matches(con, q))
+    assert len(got) == min(q.aggregation.size, sum(pool.values()))
+    taken = Counter(tuple(sorted(r.items())) for r in got)
+    assert not taken - pool, taken - pool
 
 
 def _mixed_queries():
@@ -26,7 +95,7 @@ def _mixed_queries():
             filter=gt("v", 10.0),
             aggregation=GroupAll(
                 GroupOperation(GroupOpType.COUNT, None, "cnt"),
-                GroupOperation(GroupOpType.SUM, "v", "s"),
+                GroupOperation(GroupOpType.SUM, "v", "s", field_kind="float"),
                 GroupOperation(GroupOpType.MIN, "v", "mn"),
                 GroupOperation(GroupOpType.AVG, "v", "av"),
             ),
@@ -93,82 +162,81 @@ def _mixed_queries():
     }
 
 
+ROWS1 = [(f"{'ab'[i % 2]}", ["x", "y", None][i % 3], float(i), i) for i in range(80)]
+ROWS2 = [("c", "x", float(i) + 0.5, i) for i in range(40)]
+
+
 @pytest.fixture()
 def batches(spark):
-    rows1 = [(f"{'ab'[i % 2]}", ["x", "y", None][i % 3], float(i), i) for i in range(80)]
-    rows2 = [("c", "x", float(i) + 0.5, i) for i in range(40)]
-    schema = "k string, s string, v double, n int"
-    return (
-        spark.createDataFrame(rows1, schema),
-        spark.createDataFrame(rows2, schema),
-    )
+    return spark.createDataFrame(ROWS1, SCHEMA), spark.createDataFrame(ROWS2, SCHEMA)
 
 
-def _run(spark, batches, shared: bool):
-    engine = StreamingEngine(spark, enable_shared_scan=shared)
-    for qid, q in _mixed_queries().items():
+def _run(spark, batches, queries=None):
+    # frozen clock: no member may expire (the 10 s duration cap) mid-test
+    engine = StreamingEngine(spark, clock=lambda: 1.0)
+    for qid, q in (queries or _mixed_queries()).items():
         engine.submit(qid, q)
     for b in batches:
         engine.process_batch(b)
-    return {
-        qid: sorted(map(str, rq.state.result()))
-        for qid, rq in engine.registry.queries.items()
-    }, engine
+    return engine
+
+
+def _assert_matches_oracle(engine, con, queries):
+    for qid, rq in engine.registry.queries.items():
+        q = queries[qid]
+        got = rq.state.result()
+        if isinstance(q.aggregation, Raw):
+            _check_raw(con, q, got)
+        else:
+            assert _norm(got) == _norm(_oracle(con, q)), qid
 
 
 def test_shared_scan_equals_per_query(spark, batches):
-    base, _ = _run(spark, batches, shared=False)
-    shared, engine = _run(spark, batches, shared=True)
-    assert engine.shared_scan_queries >= 20  # all 10 queries shareable x 2 batches
-    assert base.keys() == shared.keys()
-    for qid in base:
-        assert base[qid] == shared[qid], qid
+    # every family in one fleet; each live state equals DuckDB's answer
+    # over both batches
+    engine = _run(spark, batches)
+    assert engine.shared_scan_queries == 20  # 10 members x 2 batches
+    assert len(engine.registry.queries) == 10
+    _assert_matches_oracle(engine, _duck(ROWS1, ROWS2), _mixed_queries())
 
 
-def test_shared_scan_single_query_falls_back(spark, batches):
-    engine = StreamingEngine(spark, enable_shared_scan=True)
-    engine.submit("only", _mixed_queries()["grp_by"])
+def test_fleet_of_one_matches_oracle(spark, batches):
+    queries = {"only": _mixed_queries()["grp_by"]}
+    engine = _run(spark, batches[:1], queries)
+    assert engine.shared_scan_queries == 1  # served by the fleet path
+    _assert_matches_oracle(engine, _duck(ROWS1), queries)
+
+
+def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches, monkeypatch):
+    # the plan is reused while the fleet is stable, rebuilt when a member
+    # leaves (killed query), and survivors stay right throughout
+    plans = []
+    real = mq.plan_chunks
+    monkeypatch.setattr(mq, "plan_chunks", lambda qs: plans.append(len(qs)) or real(qs))
+    queries = _mixed_queries()
+    engine = _run(spark, batches[:1], queries)
+    assert plans == [9]  # the aggregation fleet (RAW plans separately)
     engine.process_batch(batches[0])
-    assert engine.shared_scan_queries == 0  # <2 shareable -> per-query path
-    assert engine.registry.queries["only"].state.result()
-
-
-def test_shared_plan_cache_invalidates_on_fleet_change(spark, batches):
-    # the ChunkPlan cache must rebuild when a member leaves the fleet
-    # (killed query) and keep producing per-query-identical results
-    engine = StreamingEngine(spark, enable_shared_scan=True)
-    for qid, q in _mixed_queries().items():
-        engine.submit(qid, q)
-    engine.process_batch(batches[0])
-    key1 = engine._chunk_cache_key
-    assert key1 is not None and engine._chunk_cache
-    engine.process_batch(batches[0])
-    assert engine._chunk_cache_key == key1  # stable fleet -> cache reused
+    assert plans == [9]  # stable fleet -> cached plan reused
     engine.kill("grp_all")
     engine.process_batch(batches[1])
-    key2 = engine._chunk_cache_key
-    assert key2 is not None and key2 != key1
-    # survivors still aggregate both batches correctly vs per-query path
-    base, _ = _run(spark, [batches[0], batches[0], batches[1]], shared=False)
-    for qid, rq in engine.registry.queries.items():
-        if qid == "grp_all":
-            continue
-        assert sorted(map(str, rq.state.result())) == base[qid], qid
+    assert plans == [9, 8]
+    assert "grp_all" not in engine.registry.queries
+    _assert_matches_oracle(engine, _duck(ROWS1, ROWS1, ROWS2), queries)
 
 
 def test_shared_plan_cache_released_when_fleet_shrinks(spark, batches):
-    # killing the fleet below the shareable threshold must drop the
-    # cached ChunkPlans (they hold the retired queries' state)
-    engine = StreamingEngine(spark, enable_shared_scan=True)
-    for qid, q in _mixed_queries().items():
-        engine.submit(qid, q)
-    engine.process_batch(batches[0])
-    assert engine._chunk_cache is not None
-    for qid in list(engine.registry.queries):
-        if qid != "raw":
-            engine.kill(qid)
+    # killed queries' RunningQuery objects (and their state) must not be
+    # pinned by cached plans or bindings once the next batch has run
+    engine = _run(spark, batches[:1])
+    killed = [qid for qid in engine.registry.queries if qid != "raw"]
+    refs = [weakref.ref(engine.registry.queries[qid]) for qid in killed]
+    for qid in killed:
+        engine.kill(qid)
     engine.process_batch(batches[1])
-    assert engine._chunk_cache is None and engine._chunk_cache_key is None
+    gc.collect()
+    assert [qid for qid, r in zip(killed, refs) if r() is not None] == []
+    assert list(engine.registry.queries) == ["raw"]
 
 
 def _raw_fleet(n: int, size: int = 5, off: int = 0):
@@ -191,7 +259,7 @@ def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
     # A RAW fleet on the shared path must keep the per-query contracts:
     # each query collects EXACTLY its limit of rows matching ITS filter
     # (projected per ITS projection) and early-COMPLETEs when full.
-    engine = StreamingEngine(spark, enable_shared_scan=True)
+    engine = StreamingEngine(spark)
     for qid, q in _raw_fleet(6).items():
         engine.submit(qid, q)
     emitted = {}
@@ -213,28 +281,15 @@ def test_shared_raw_fleet_limit_and_early_complete(spark, batches):
 
 def test_shared_raw_fleet_equals_per_query_counts(spark, batches):
     # remaining-capacity decay across batches: a fleet too selective to
-    # fill on batch 0 keeps accumulating on batch 1, and totals equal the
-    # per-query path's exactly (content equality is order-dependent for
-    # RAW; counts and filter-consistency are the contract). filter n>20+i:
+    # fill on batch 0 keeps accumulating on batch 1. filter n>20+i:
     # batch 0 supplies 59-i matches, batch 1 another 19-i — never full at
-    # size 90, so the fleet stays live and shares BOTH batches
-    def run(shared):
-        engine = StreamingEngine(spark, enable_shared_scan=shared)
-        for qid, q in _raw_fleet(4, size=90, off=20).items():
-            engine.submit(qid, q)
-        for b in batches:
-            engine.process_batch(b)
-        return {
-            qid: rq.state.result()
-            for qid, rq in engine.registry.queries.items()
-        }, engine
-
-    base, _ = run(False)
-    got, engine = run(True)
-    assert engine.shared_scan_queries >= 8
-    assert base.keys() == got.keys()
-    for qid in base:
-        assert len(got[qid]) == len(base[qid]), qid
+    # size 90, so the fleet stays live and shares BOTH batches; each
+    # member holds exactly its matches over the union
+    queries = _raw_fleet(4, size=90, off=20)
+    engine = _run(spark, batches, queries)
+    assert engine.shared_scan_queries == 8
+    assert len(engine.registry.queries) == 4
+    _assert_matches_oracle(engine, _duck(ROWS1, ROWS2), queries)
 
 
 def test_raw_fleet_is_one_chunk_plan():
@@ -263,62 +318,40 @@ def test_raw_fleet_is_one_chunk_plan():
 
 def test_shared_quantile_fleet_equals_per_query(spark, batches):
     # QUANTILE fleet on the shared KLL pass: small input (< SAMPLE_CAP)
-    # is EXACT on both paths, so results must be identical; the fleet
+    # is EXACT, so every member equals DuckDB's quantile_cont; the fleet
     # plans into one QuantileChunkPlan and runs one job per batch.
-    from bullet_storm_spark.streaming.multiquery import (
-        QuantileChunkPlan,
-        plan_chunks,
-    )
-    from bullet_storm_spark.streaming.state import make_state
-
-    def fleet():
-        return {
-            f"qt{i}": Query(
-                filter=gt("n", 10 * i) if i else None,
-                aggregation=Distribution(
-                    field="v",
-                    dist_type=DistributionType.QUANTILE,
-                    points=[0.1, 0.5, 0.9],
-                ),
-                duration_ms=600_000,
-            )
-            for i in range(5)
-        }
-
-    def run(shared):
-        engine = StreamingEngine(spark, enable_shared_scan=shared)
-        for qid, q in fleet().items():
-            engine.submit(qid, q)
-        for b in batches:
-            engine.process_batch(b)
-        return {
-            qid: rq.state.result()
-            for qid, rq in engine.registry.queries.items()
-        }, engine
-
-    base, _ = run(False)
-    got, engine = run(True)
+    queries = {
+        f"qt{i}": Query(
+            filter=gt("n", 10 * i) if i else None,
+            aggregation=Distribution(
+                field="v",
+                dist_type=DistributionType.QUANTILE,
+                points=[0.1, 0.5, 0.9],
+            ),
+            duration_ms=600_000,
+        )
+        for i in range(5)
+    }
+    engine = _run(spark, batches, queries)
     assert engine.shared_scan_queries == 10
-    assert base == got
-
-    class _RQ:
-        def __init__(self, q):
-            self.query = q
-            self.state = make_state(q)
-            self.id = id(self)
-
-    chunks = plan_chunks([_RQ(q) for q in fleet().values()])
-    assert len(chunks) == 1 and isinstance(chunks[0], QuantileChunkPlan)
+    assert len(engine.registry.queries) == 5
+    _assert_matches_oracle(engine, _duck(ROWS1, ROWS2), queries)
+    chunks = mq.plan_chunks(engine.registry.active())
+    assert len(chunks) == 1 and isinstance(chunks[0], mq.QuantileChunkPlan)
 
 
 @pytest.mark.parametrize("seed", range(4))
 def test_shared_scan_random_fleet_equivalence(spark, seed):
     # seeded random mixed fleets (every family incl. RAW + QUANTILE,
-    # random filters/projections/limits/points) must produce per-query
-    # states IDENTICAL to the per-query path across two batches — the
-    # property version of the fixed-fleet tests above. RAW content is
-    # order-dependent by contract, so RAW compares count + filter
-    # consistency; everything else compares exactly.
+    # random filters/projections/limits/points) must match DuckDB over
+    # the union of the two batches — the property version of the
+    # fixed-fleet tests above. RAW checks count + filter consistency
+    # (content is order-dependent by contract); everything else compares
+    # exactly. Each fleet also gets aggregate record-window members
+    # (additive windows: one emission per emit_every matches, state =
+    # the union) and COUNT DISTINCT members, and odd seeds run under a
+    # rate limit, where every live member's consumed-record count must
+    # equal its DuckDB match count.
     import random as _random
 
     from bullet_storm_spark.plans.expressions import lt
@@ -329,10 +362,9 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
         for i in range(120)
     ]
     rows2 = [("d", "x", float(i % 53) + 0.5, i + 120) for i in range(60)]
-    schema = "k string, s string, v double, n int"
     batches = (
-        spark.createDataFrame(rows1, schema).repartition(5),
-        spark.createDataFrame(rows2, schema).repartition(3),
+        spark.createDataFrame(rows1, SCHEMA).repartition(5),
+        spark.createDataFrame(rows2, SCHEMA).repartition(3),
     )
 
     def rand_filter():
@@ -341,16 +373,14 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
              lt("n", rng.randint(10, 170)), eq("k", rng.choice("abcd"))]
         )
 
-    def rand_query(i):
-        fam = rng.randrange(7)
-        f = rand_filter()
+    def rand_agg(fam):
         if fam == 0:
-            agg = GroupAll(
+            return GroupAll(
                 GroupOperation(GroupOpType.COUNT, None, "cnt"),
-                GroupOperation(GroupOpType.SUM, "v", "s"),
+                GroupOperation(GroupOpType.SUM, "v", "s", field_kind="float"),
             )
-        elif fam == 1:
-            agg = GroupBy(
+        if fam == 1:
+            return GroupBy(
                 fields={"k": "key"},
                 operations=[
                     GroupOperation(GroupOpType.COUNT, None, "cnt"),
@@ -363,10 +393,10 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
                     ),
                 ],
             )
-        elif fam == 2:
-            agg = TopK(size=rng.randint(1, 4), name="cnt", fields={"s": ""})
-        elif fam == 3:
-            agg = Distribution(
+        if fam == 2:
+            return TopK(size=rng.randint(1, 4), name="cnt", fields={"s": ""})
+        if fam == 3:
+            return Distribution(
                 field="v",
                 dist_type=rng.choice(
                     [DistributionType.PMF, DistributionType.CDF]
@@ -375,50 +405,72 @@ def test_shared_scan_random_fleet_equivalence(spark, seed):
                     rng.sample([5.0, 20.0, 40.0, 60.0, 80.0], k=rng.randint(1, 3))
                 ),
             )
-        elif fam == 4:
-            agg = Distribution(
+        if fam == 4:
+            return Distribution(
                 field="v",
                 dist_type=DistributionType.QUANTILE,
                 points=sorted(
                     rng.sample([0.1, 0.25, 0.5, 0.75, 0.9], k=rng.randint(1, 3))
                 ),
             )
-        elif fam == 5:
-            agg = CountDistinct(fields=["s"], name="u", exact=True)
-        else:
-            agg = Raw(size=rng.randint(3, 400))
-        return Query(filter=f, aggregation=agg, duration_ms=600_000)
+        if fam == 5:
+            return CountDistinct(fields=["s"], name="u", exact=True)
+        return Raw(size=rng.randint(3, 400))
+
+    def rand_query(i):
+        fam = rng.randrange(7)
+        f = rand_filter()
+        return Query(filter=f, aggregation=rand_agg(fam), duration_ms=600_000)
 
     fleet = {f"rf{seed}-{i}": rand_query(i) for i in range(rng.randint(6, 14))}
+    windows = {}
+    for i in range(rng.randint(2, 4)):
+        f = rand_filter()
+        every = rng.randint(10, 100)
+        fleet[f"rw{seed}-{i}"] = Query(
+            filter=f,
+            aggregation=rand_agg(rng.randrange(5)),
+            window=SlidingRecordWindow(emit_every=every, include_all=True),
+            duration_ms=600_000,
+        )
+        windows[f"rw{seed}-{i}"] = every
+    for i in range(rng.randint(1, 3)):
+        fleet[f"cd{seed}-{i}"] = Query(
+            filter=rand_filter(),
+            aggregation=CountDistinct(
+                fields=[rng.choice("ks")], name="u", exact=rng.random() < 0.5
+            ),
+            duration_ms=600_000,
+        )
+    rate_limited = seed % 2 == 1
 
-    def run(shared):
-        engine = StreamingEngine(spark, enable_shared_scan=shared)
-        for qid, q in fleet.items():
-            engine.submit(qid, q)
-        done = {}
-        engine.on_result(lambda qid, clip: done.setdefault(qid, clip))
-        for b in batches:
-            engine.process_batch(b)
-        live = {
-            qid: rq.state.result()
-            for qid, rq in engine.registry.queries.items()
-        }
-        return live, done
-
-    base_live, base_done = run(False)
-    got_live, got_done = run(True)
-    assert base_live.keys() == got_live.keys()
-    assert base_done.keys() == got_done.keys()
-    for qid in fleet:
-        q = fleet[qid]
-        b = base_live.get(qid, base_done[qid].records if qid in base_done else None)
-        g = got_live.get(qid, got_done[qid].records if qid in got_done else None)
+    engine = StreamingEngine(
+        spark,
+        clock=lambda: 1.0,
+        rate_limit_records_per_s=10**9 if rate_limited else None,
+    )
+    for qid, q in fleet.items():
+        engine.submit(qid, q)
+    done, emitted = {}, Counter()
+    engine.on_result(lambda qid, clip: done.setdefault(qid, clip))
+    engine.on_result(lambda qid, clip: emitted.update([qid]))
+    for b in batches:
+        engine.process_batch(b)
+    assert engine.shared_scan_queries >= len(fleet)
+    con = _duck(rows1, rows2)
+    for qid, q in fleet.items():
+        rq = engine.registry.queries.get(qid)
+        got = rq.state.result() if rq is not None else done[qid].records
         if isinstance(q.aggregation, Raw):
-            assert len(b) == len(g), qid
-            if q.filter is not None:
-                col = q.filter.to_column()  # noqa: F841 (structural check only)
-        else:
-            assert sorted(map(str, b)) == sorted(map(str, g)), qid
+            _check_raw(con, q, got)
+            continue
+        assert rq is not None, qid  # aggregates outlive both batches
+        assert _norm(got) == _norm(_oracle(con, q)), qid
+        n_match = len(_matches(con, q))
+        if qid in windows:
+            assert emitted[qid] == n_match // windows[qid], qid
+        if rate_limited:
+            assert rq.records_consumed == n_match, qid
 
 
 def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):

@@ -323,6 +323,34 @@ def test_registry_replay_on_restart(spark, clock, tmp_path):
     assert "p1" in reg2.queries and "p2" not in reg2.queries  # removed-id dedup
 
 
+def test_registry_replay_truncates_torn_last_line(clock, tmp_path):
+    # a crash inside the log append leaves a torn last line with no
+    # trailing newline: replay drops it and restores the rest
+    storage = str(tmp_path / "registry")
+    reg1 = QueryRegistry(storage_dir=storage, clock=clock)
+    reg1.submit("p1", Query(aggregation=Raw(size=5), duration_ms=60_000))
+    reg1.submit("p2", Query(aggregation=Raw(size=5), duration_ms=60_000))
+    log = tmp_path / "registry" / "queries.log"
+    data = log.read_bytes()
+    last = data.rstrip(b"\n").rfind(b"\n") + 1
+    log.write_bytes(data[: last + (len(data) - last) // 2])
+    reg2 = QueryRegistry(storage_dir=storage, clock=clock)
+    assert reg2.replay() == 1
+    assert list(reg2.queries) == ["p1"]
+
+
+def test_registry_replay_raises_on_torn_middle_line(clock, tmp_path):
+    storage = str(tmp_path / "registry")
+    reg1 = QueryRegistry(storage_dir=storage, clock=clock)
+    reg1.submit("p1", Query(aggregation=Raw(size=5), duration_ms=60_000))
+    reg1.submit("p2", Query(aggregation=Raw(size=5), duration_ms=60_000))
+    log = tmp_path / "registry" / "queries.log"
+    first, second = log.read_bytes().splitlines(keepends=True)
+    log.write_bytes(first[: len(first) // 2] + b"\n" + second)
+    with pytest.raises(json.JSONDecodeError):
+        QueryRegistry(storage_dir=storage, clock=clock).replay()
+
+
 def test_real_readstream_file_source(spark, clock, tmp_path):
     """End-to-end over an actual Structured Streaming file source."""
     src = tmp_path / "stream_in"

@@ -6,7 +6,7 @@ import math
 
 from bullet_storm_spark import Distribution, DistributionType, Query
 from bullet_storm_spark.operators.sketches import KLLSummary
-from bullet_storm_spark.streaming import StreamingEngine
+from bullet_storm_spark.streaming import QueryRegistry, StreamingEngine
 from bullet_storm_spark.streaming.state import DistributionState
 
 
@@ -48,27 +48,33 @@ def test_bounded_summary_above_cap(spark, monkeypatch):
 
 def test_tree_merge_bounds_driver_traffic(spark, monkeypatch):
     """A scan with many partitions must NOT funnel one summary per
-    partition to the driver: the coalesce+merge stage caps the partial
-    frame at TREE_FANIN rows, and (exact regime) the merged result is
-    identical to the unmerged path's."""
-    monkeypatch.setattr(DistributionState, "TREE_FANIN", 4)
-    state = DistributionState(
-        Distribution(field="v", dist_type=DistributionType.QUANTILE, points=[0.5])
+    partition to the driver: the fleet quantile pass's coalesce+merge
+    stage caps the partial frame at TREE_FANIN rows, and (exact regime)
+    the merged result is identical to the unmerged path's."""
+    from bullet_storm_spark.streaming.multiquery import (
+        _collect_quantile_chunk,
+        _quantile_chunk_df,
+        plan_chunks,
     )
+
+    monkeypatch.setattr(DistributionState, "TREE_FANIN", 4)
+
+    def fleet_pass(frame):
+        rq = QueryRegistry().submit("q", _quantile_query([0.5]))
+        (cp,) = plan_chunks([rq])
+        (rows,) = _collect_quantile_chunk(_quantile_chunk_df(frame, cp), cp)
+        rq.state.merge(rows)
+        return rq.state, rows
+
     df = spark.createDataFrame(
         [(float(i),) for i in range(400)], "v double"
     ).repartition(64)
-    part = state.partial(df)
-    rows = [r.asDict() for r in part.collect()]
+    state, rows = fleet_pass(df)
     assert len(rows) <= 4, "driver received more than TREE_FANIN summaries"
     assert sum(r["__n"] for r in rows) == 400
-    state.merge(rows)
     # exact regime: same quantile as a no-tree (few-partition) run
-    flat_state = DistributionState(
-        Distribution(field="v", dist_type=DistributionType.QUANTILE, points=[0.5])
-    )
-    flat = [r.asDict() for r in flat_state.partial(df.coalesce(2)).collect()]
-    flat_state.merge(flat)
+    flat_state, flat_rows = fleet_pass(df.coalesce(2))
+    assert len(flat_rows) == 2
     assert state.summary.is_exact() and flat_state.summary.is_exact()
     assert state.result() == flat_state.result()
 
