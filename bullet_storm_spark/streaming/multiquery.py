@@ -20,9 +20,12 @@ a fleet of GROUP ALL health queries is ONE keyless aggregate regardless of
 fleet size. This is the reference's QueryManager one-record-many-queries
 fan-out (SURVEY.md §4 row 1 / §7.3 known-hard #1) as Catalyst plans.
 
-GROUP ALL / GROUP BY, TOP K, COUNT DISTINCT and DISTRIBUTION PMF/CDF fold
-into the key-set jobs; each member's match count doubles as its
-record-consumption metric (rate limits, record windows). RAW fleets (the
+GROUP BY and TOP K group on their key columns. GROUP ALL, COUNT DISTINCT
+and DISTRIBUTION PMF/CDF are keyless and share one key-set: a PMF/CDF
+member pre-selects its filtered bin index and adds one conditional count
+per bin, so members with different split points never split it. Each
+member's match count doubles as its record-consumption metric (rate
+limits, record windows). RAW fleets (the
 reference's most common query shape, ``T/JoinBoltTest.java:340-351``
 makeRawQuery) share ONE
 mapInPandas pass per <=MAX_RAW_MEMBERS_PER_JOB members: every member's
@@ -41,7 +44,9 @@ filtered values into its own mergeable KLL summary with the one
 ``sketches.kll_fold`` compactor. Record windows need nothing special:
 their partial is the same and emission happens driver-side.
 
-``FleetPlan`` is the engine's one plan cache, and it isolates faults per
+``FleetPlan`` is the engine's one plan cache. Each chunk binds to the
+batch (Catalyst analysis) and collects inside one thread-pool task, so
+one chunk's analysis overlaps the others' jobs. Faults are isolated per
 chunk: a chunk that fails to plan, bind or collect re-runs each member as
 a fleet of one, and only members whose solo run fails are reported.
 """
@@ -109,9 +114,10 @@ def plan_jobs(queries) -> list[_Job]:
         key_cols: dict[str, Column] = {}
         key_to_alias: dict[str, str] = {}
 
-        if isinstance(state, CountDistinctState):
-            keyed = False  # keyless HLL sketch job
-        elif isinstance(state, GroupState):
+        # COUNT DISTINCT (sketch / key-set column) and PMF/CDF (per-bin
+        # conditional counts) are keyless: they join the GROUP ALL job
+        keyed = False
+        if isinstance(state, GroupState):
             agg: GroupBy = state.agg
             for fname in agg.fields:
                 col, tag = resolve(fname)
@@ -128,16 +134,6 @@ def plan_jobs(queries) -> list[_Job]:
                     col.cast("string"), F.lit(NULL_RENDERING)
                 )
                 key_to_alias[name] = agg_t.alias_of(fname)
-            keyed = True
-        else:  # DistributionState PMF/CDF
-            col, tag = resolve(state.agg.field)
-            v = col.cast("double")
-            bin_idx = F.lit(0)
-            for pt in state.points:
-                bin_idx = bin_idx + (v >= F.lit(pt)).cast("int")
-            name = _canon(f"bin:{tag}:{','.join(map(repr, state.points))}")
-            key_cols[name] = bin_idx
-            key_to_alias[name] = "__bin"
             keyed = True
 
         job_key = tuple(sorted(key_cols))
@@ -239,15 +235,20 @@ def _add_agg_cols(member: _Member, state, rq, resolve, job: _Job) -> None:
             F.sum(F.when(f_ref, 1).otherwise(0)).alias(f"{p}match")
         )
 
-    else:  # DistributionState PMF/CDF: null values never count in bins,
-        # but they DO count as consumed records (match uses the raw filter)
-        vcol, _ = resolve(state.agg.field)
-        effname = f"{p}fv"
-        job.value_cols[effname] = f_ref & vcol.cast("double").isNotNull()
-        eff = F.col(effname)
-        c = F.sum(F.when(eff, 1).otherwise(0)).cast("bigint")
-        member.agg_cols.append(c.alias(f"{p}c"))
-        member.rename[f"{p}c"] = "__c"
+    else:  # DistributionState PMF/CDF: one conditional count per bin. A
+        # null value has a null bin index, so no bin counts it, but it DOES
+        # count as a consumed record (match uses the raw filter); NaN
+        # compares above every point and lands in the top bin
+        v = resolve(state.agg.field)[0].cast("double")
+        bin_idx = F.lit(0)
+        for pt in state.points:
+            bin_idx = bin_idx + (v >= F.lit(pt)).cast("int")
+        bname = f"{p}bin"
+        job.value_cols[bname] = F.when(f_ref, bin_idx)
+        for b in range(len(state.points) + 1):
+            c = F.sum(F.when(F.col(bname) == b, 1).otherwise(0)).cast("bigint")
+            member.agg_cols.append(c.alias(f"{p}b{b}"))
+            member.rename[f"{p}b{b}"] = f"__b{b}"
         member.agg_cols.append(
             F.sum(F.when(f_ref, 1).otherwise(0)).cast("bigint").alias(f"{p}match")
         )
@@ -575,12 +576,6 @@ def _collect_raw_chunk(folded: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
     return result
 
 
-def _run_raw_chunk(batch_df: DataFrame, cp: RawChunkPlan) -> list[list[dict]]:
-    """Execute one shared RAW pass (bind + collect in one call — the
-    uncached path)."""
-    return _collect_raw_chunk(_raw_chunk_folded_df(batch_df, cp), cp)
-
-
 @dataclass(eq=False)
 class ChunkPlan:
     """One aggregation job's batch-INDEPENDENT plan pieces: aliased
@@ -627,8 +622,15 @@ def plan_chunks(queries) -> list:
     chunks: list = list(plan_raw_chunks(raw))
     chunks.extend(_plan_quantile_chunks(quant))
     for job in plan_jobs(agg):
-        for start in range(0, len(job.members), MAX_MEMBERS_PER_JOB):
-            members = job.members[start : start + MAX_MEMBERS_PER_JOB]
+        # COUNT DISTINCT's collect_set / hll_sketch_agg turn a whole chunk
+        # into an ObjectHashAggregate, which has no whole-stage codegen:
+        # packing those members last keeps the key-set's other chunks
+        # (GROUP ALL, PMF/CDF) codegen'd at the same chunk count
+        ordered = sorted(
+            job.members, key=lambda m: isinstance(m.rq.state, CountDistinctState)
+        )
+        for start in range(0, len(ordered), MAX_MEMBERS_PER_JOB):
+            members = ordered[start : start + MAX_MEMBERS_PER_JOB]
             needed_values = {
                 name: col
                 for name, col in job.value_cols.items()
@@ -763,33 +765,32 @@ class FleetPlan:
                 batch_df.unpersist()
 
     def _run_chunks(self, batch_df, chunks, broken, pool_width) -> dict:
-        """Bind (reusing this frame's bindings) and collect every chunk;
-        a chunk that fails either step appends its members to ``broken``."""
+        """Bind (reusing this frame's bindings) and collect every chunk,
+        both steps in one pool task per chunk, so one chunk's Catalyst
+        analysis overlaps the others' jobs; a chunk that fails either
+        step appends its members to ``broken``."""
         from concurrent.futures import ThreadPoolExecutor
 
         prev = self._bound if self._frame is batch_df else {}
-        bound = {}
-        for cp in chunks:
-            try:
-                bound[cp] = prev[cp] if cp in prev else _bind(batch_df, cp)
-            except Exception:  # noqa: BLE001
-                broken.append(cp.rqs)
-        self._frame, self._bound = batch_df, bound
 
-        def collect(item):
-            cp, out = item
+        def run(cp):
+            out = prev.get(cp)
             try:
-                return cp, _collect(out, cp)
+                if out is None:
+                    out = _bind(batch_df, cp)
+                return cp, out, _collect(out, cp)
             except Exception:  # noqa: BLE001
-                return cp, None
+                return cp, out, None
 
-        if len(bound) > 1:
-            with ThreadPoolExecutor(max_workers=min(len(bound), pool_width)) as pool:
-                done = list(pool.map(collect, bound.items()))
+        if len(chunks) > 1:
+            with ThreadPoolExecutor(max_workers=min(len(chunks), pool_width)) as pool:
+                done = list(pool.map(run, chunks))
         else:
-            done = [collect(item) for item in bound.items()]
+            done = [run(cp) for cp in chunks]
+        self._frame = batch_df
+        self._bound = {cp: out for cp, out, _ in done if out is not None}
         partials: dict[str, list[dict[str, Any]]] = {}
-        for cp, rows in done:
+        for cp, _, rows in done:
             if rows is None:
                 broken.append(cp.rqs)
             else:

@@ -26,7 +26,7 @@ Partial-row shapes (one per state, produced by multiquery):
   GROUP     key aliases + __c{i}/__s{i}/__n{i}/__m{i} + __nrec
   COUNT DIST __ks (exact key list) or __sketch (HLL bytes) + __nrec
   TOP K     key aliases + __c
-  PMF/CDF   __bin + __c + __nrec
+  PMF/CDF   __b{i} + __nrec
   QUANTILE  __levels + __n + __nrec
 """
 
@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from bullet_storm_spark.operators.distribution import cdf_labels, pmf_labels
 from bullet_storm_spark.plans.query import (
@@ -180,8 +180,12 @@ class GroupState(QueryState):
 class CountDistinctState(QueryState):
     """Exact: per-batch distinct keys merged into a driver set (matches the
     reference's own small-cardinality exactness tests). Approx: per-batch
-    HyperLogLog sketch bytes merged with hll_union — bounded state at any
-    cardinality, the Theta-sketch contract (FilterBoltTest.java:680-710)."""
+    HyperLogLog sketch bytes merged with an HLL union — bounded state at
+    any cardinality, the Theta-sketch contract (FilterBoltTest.java:680-710).
+    Union and estimate run on the driver JVM through the DataSketches
+    library behind Spark's ``hll_union`` / ``hll_sketch_estimate``, with
+    the same calls, so the bytes and the estimate are Spark's own — but
+    no Spark job runs per merge or per emission."""
 
     def __init__(self, agg: CountDistinct):
         self.agg = agg
@@ -202,22 +206,14 @@ class CountDistinctState(QueryState):
             if self.sketch is None:
                 self.sketch = bytes(new)
             else:
-                merged = SparkSession.active().createDataFrame(
-                    [(self.sketch, bytes(new))], "a binary, b binary"
-                ).select(
-                    F.hll_union("a", "b").alias("u")
-                ).collect()[0]["u"]
-                self.sketch = bytes(merged)
+                self.sketch = hll_union(self.sketch, bytes(new))
 
     def result(self) -> list[dict[str, Any]]:
         if self.agg.exact:
             return [{self.agg.name: len(self.keys)}]
         if self.sketch is None:
             return [{self.agg.name: 0}]
-        est = SparkSession.active().createDataFrame(
-            [(self.sketch,)], "s binary"
-        ).select(F.hll_sketch_estimate("s").alias("e")).collect()[0]["e"]
-        return [{self.agg.name: int(est)}]
+        return [{self.agg.name: hll_estimate(self.sketch)}]
 
     def reset(self) -> None:
         self.keys = set()
@@ -225,6 +221,30 @@ class CountDistinctState(QueryState):
 
     def consumed(self, rows: list[dict[str, Any]]) -> int:
         return sum(r["__nrec"] or 0 for r in rows)
+
+
+def _heapify(jvm, sketch: bytes):
+    ds = jvm.org.apache.datasketches
+    return ds.hll.HllSketch.heapify(ds.memory.Memory.wrap(sketch))
+
+
+def hll_union(a: bytes, b: bytes) -> bytes:
+    """Spark's ``hll_union(a, b)``: a union at the smaller lgConfigK,
+    serialized as an updatable HLL_8 sketch."""
+    jvm = SparkSession.active()._jvm
+    sa, sb = _heapify(jvm, a), _heapify(jvm, b)
+    hll = jvm.org.apache.datasketches.hll
+    union = hll.Union(min(sa.getLgConfigK(), sb.getLgConfigK()))
+    union.update(sa)
+    union.update(sb)
+    return bytes(union.getResult(hll.TgtHllType.HLL_8).toUpdatableByteArray())
+
+
+def hll_estimate(sketch: bytes) -> int:
+    """Spark's ``hll_sketch_estimate``: the HLL estimate, rounded half up
+    by Java's ``Math.round``."""
+    jvm = SparkSession.active()._jvm
+    return jvm.java.lang.Math.round(_heapify(jvm, sketch).getEstimate())
 
 
 class TopKState(QueryState):
@@ -322,10 +342,11 @@ class DistributionState(QueryState):
                 )
             return
         for r in rows:
-            if r["__bin"] is None:  # null-value bin: counted only by consumed()
-                continue
-            self.bin_counts[r["__bin"]] += r["__c"]
-            self.total += r["__c"]
+            # null values count only toward __nrec (consumed), never a bin
+            for i in range(len(self.bin_counts)):
+                c = r[f"__b{i}"] or 0
+                self.bin_counts[i] += c
+                self.total += c
 
     def _round(self, x: float) -> float:
         return round(x, self.agg.round_to) if self.agg.round_to is not None else x

@@ -483,8 +483,8 @@ def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
     # matching its filter.
     from bullet_storm_spark.streaming.multiquery import (
         RAW_FOLD_FANIN,
+        _collect_raw_chunk,
         _raw_chunk_folded_df,
-        _run_raw_chunk,
         plan_raw_chunks,
     )
     from bullet_storm_spark.streaming.state import RawState
@@ -507,7 +507,7 @@ def test_raw_fold_bounds_driver_rows_at_any_partition_count(spark):
     # the bound that matters: independent of the 128 partitions
     assert folded_rows <= RAW_FOLD_FANIN * caps_total
     # and the per-member contract is intact through the fold
-    result = _run_raw_chunk(batch, cp)
+    result = _collect_raw_chunk(_raw_chunk_folded_df(batch, cp), cp)
     for i, member_rows in enumerate(result):
         assert len(member_rows) == 7, i
         key = "num" if i % 2 else "n"
@@ -534,3 +534,116 @@ def test_split_fleet_is_the_single_cache_key(spark):
     fleet = [raw_qs[0], mixed[0], raw_qs[1], mixed[1], raw_qs[2]]
     raw, rest = split_fleet(fleet)
     assert raw == raw_qs and rest == mixed
+
+
+def test_plan_is_one_job_per_key_set():
+    # a fleet shaped like the benchmark's windowed fleet: PMF/CDF members
+    # with pairwise-different split points are keyless, so they share the
+    # GROUP ALL / COUNT DISTINCT chunks and the plan has exactly
+    # ceil(members / MAX_MEMBERS_PER_JOB) chunks per distinct key-set
+    import math
+
+    def member(i):
+        fam = i % 6
+        if fam == 0:
+            agg = GroupAll(
+                GroupOperation(GroupOpType.COUNT, None, "cnt"),
+                GroupOperation(GroupOpType.SUM, "v", "s", field_kind="float"),
+            )
+        elif fam == 1:
+            agg = GroupBy(
+                fields={"k": "", "s": ""},
+                operations=[GroupOperation(GroupOpType.COUNT, None, "cnt")],
+            )
+        elif fam == 2:
+            agg = TopK(size=3, name="cnt", fields={"k": ""})
+        elif fam == 3:
+            agg = Distribution(
+                field="v",
+                dist_type=[DistributionType.PMF, DistributionType.CDF][i % 2],
+                points=[float(i), i + 40.0, i + 100.0],
+            )
+        elif fam == 4:
+            agg = Distribution(
+                field="v",
+                dist_type=[DistributionType.PMF, DistributionType.CDF][i % 2],
+                points=[i + 0.5, i + 60.0],
+            )
+        else:
+            agg = CountDistinct(fields=["k"], name="u", exact=True)
+        return Query(filter=gt("v", float(i)), aggregation=agg, duration_ms=600_000)
+
+    registry = QueryRegistry()
+    fleet = [registry.submit(f"m{i}", member(i)) for i in range(60)]
+    chunks = mq.plan_chunks(fleet)
+    assert all(isinstance(cp, mq.ChunkPlan) for cp in chunks)
+    members, n_chunks = Counter(), Counter()
+    for cp in chunks:
+        members[tuple(cp.key_names)] += len(cp.members)
+        n_chunks[tuple(cp.key_names)] += 1
+    # keyless, GROUP BY (k, s) and TOP K k
+    assert len(members) == 3
+    assert members[()] == 40  # 10 GROUP ALL + 20 PMF/CDF + 10 COUNT DISTINCT
+    for keys, n in members.items():
+        assert n_chunks[keys] == math.ceil(n / mq.MAX_MEMBERS_PER_JOB), keys
+    assert len(chunks) == 3 + 1 + 1
+    for cp in chunks:
+        for rq in cp.rqs:
+            if isinstance(rq.query.aggregation, Distribution):
+                assert cp.key_names == [], rq.id
+    # COUNT DISTINCT members (object aggregates, no whole-stage codegen)
+    # pack last, so at most one chunk mixes them with the other members
+    mixed = [
+        cp
+        for cp in chunks
+        if len({isinstance(rq.query.aggregation, CountDistinct) for rq in cp.rqs}) > 1
+    ]
+    assert len(mixed) <= 1
+
+
+# values on both sides of, and exactly at, the split points, plus nulls
+EDGE_VALUES = [None, 0.5, 5.0, 7.5, 10.0, 10.0, 20.0, 49.999, 50.0, 50.0, 75.0, None]
+EDGE1 = [
+    ("ab"[i % 2], ["x", "y", None][i % 3], EDGE_VALUES[i % 12], i) for i in range(36)
+]
+EDGE2 = [("c", "x", EDGE_VALUES[(i * 5) % 12], i) for i in range(24)]
+
+
+def test_pmf_cdf_fleet_edges_match_oracle(spark):
+    # PMF/CDF members in one fleet, with null values, values exactly on a
+    # split point, and points shared between members as well as points
+    # that differ; each member equals DuckDB over both batches, and under
+    # a rate limit its consumed records equal its filter matches, null
+    # values included
+    def dist(kind, points, flt=None):
+        return Query(
+            filter=flt,
+            aggregation=Distribution(field="v", dist_type=kind, points=points),
+            duration_ms=600_000,
+        )
+
+    pmf, cdf = DistributionType.PMF, DistributionType.CDF
+    queries = {
+        "pmf_a": dist(pmf, [10.0, 50.0]),
+        "cdf_a": dist(cdf, [10.0, 50.0]),
+        "pmf_b": dist(pmf, [5.0, 10.0, 20.0], gt("n", 3)),
+        "cdf_b": dist(cdf, [5.0, 10.0, 20.0], eq("k", "a")),
+        "pmf_c": dist(pmf, [0.5, 7.5], eq("s", "x")),
+        "cdf_d": dist(cdf, [50.0], eq("k", "c")),
+        "pmf_e": dist(pmf, [49.999, 75.0]),
+    }
+    engine = StreamingEngine(
+        spark, clock=lambda: 1.0, rate_limit_records_per_s=10**9
+    )
+    for qid, q in queries.items():
+        engine.submit(qid, q)
+    for rows in (EDGE1, EDGE2):
+        engine.process_batch(spark.createDataFrame(rows, SCHEMA))
+    con = _duck(EDGE1, EDGE2)
+    assert sorted(engine.registry.queries) == sorted(queries)
+    _assert_matches_oracle(engine, con, queries)
+    for qid, q in queries.items():
+        rq = engine.registry.queries[qid]
+        matches = _matches(con, q)
+        assert any(r["v"] is None for r in matches), qid
+        assert rq.records_consumed == len(matches), qid

@@ -81,3 +81,51 @@ def test_distribution_state_split_invariant(spark, cuts):
         duration_ms=3_600_000,  # 1h: a loaded machine outlived 10min once
     )
     assert _run_split(spark, q, []) == _run_split(spark, q, cuts)
+
+
+def test_driver_hll_union_and_estimate_equal_spark(spark):
+    # approximate COUNT DISTINCT merges and estimates on the driver JVM;
+    # the bytes and the estimate must be exactly Spark's hll_union /
+    # hll_sketch_estimate, for sketches in each HLL mode (sparse LIST and
+    # SET, dense HLL) and through a three-way fold
+    from pyspark.sql import functions as F
+
+    from bullet_storm_spark.streaming.state import hll_estimate, hll_union
+
+    def sketch(lo, hi):
+        return bytes(
+            spark.range(lo, hi)
+            .agg(F.hll_sketch_agg("id").alias("s"))
+            .collect()[0]["s"]
+        )
+
+    def spark_union(a, b):
+        return bytes(
+            spark.createDataFrame([(a, b)], "a binary, b binary")
+            .select(F.hll_union("a", "b").alias("u"))
+            .collect()[0]["u"]
+        )
+
+    def spark_estimate(s):
+        return (
+            spark.createDataFrame([(s,)], "s binary")
+            .select(F.hll_sketch_estimate("s").alias("e"))
+            .collect()[0]["e"]
+        )
+
+    def mode(s):
+        ds = spark._jvm.org.apache.datasketches
+        return ds.hll.HllSketch.heapify(ds.memory.Memory.wrap(s)).getCurMode().toString()
+
+    small, mid, dense = sketch(0, 5), sketch(3, 120), sketch(60, 6000)
+    assert [mode(s) for s in (small, mid, dense)] == ["LIST", "SET", "HLL"]
+    for a, b in [(small, sketch(2, 7)), (small, mid), (mid, sketch(100, 300)),
+                 (mid, dense), (dense, sketch(4000, 20000))]:
+        got = hll_union(a, b)
+        assert got == spark_union(a, b)
+        assert hll_estimate(got) == spark_estimate(got)
+    folded = hll_union(hll_union(small, mid), dense)
+    assert folded == spark_union(spark_union(small, mid), dense)
+    assert hll_estimate(folded) == spark_estimate(folded)
+    for s in (small, mid, dense):
+        assert hll_estimate(s) == spark_estimate(s)
